@@ -52,14 +52,17 @@ def resolve_keymap(names, repo_dir: Path = _REPO) -> dict[str, str]:
         if (m := _re.search(r"BENCH_KEYMAP_r(\d+)\.json$", f))
     )
     if sidecars:
+        newest = sidecars[-1][1]
         try:
-            prior = json.loads(Path(sidecars[-1][1]).read_text())["keymap"]
-        except (OSError, ValueError, KeyError):
-            prior = {}
+            prior = json.loads(Path(newest).read_text())["keymap"]
+        except (OSError, ValueError, KeyError) as exc:
+            # falling back to {} would silently re-key every query from 00
+            raise RuntimeError(f"unreadable keymap sidecar {newest}: {exc!r}") from exc
     name_set = set(names)
     keymap = {k: n for k, n in prior.items() if n in name_set}
     taken = set(keymap.values())
-    next_idx = max((int(k, 16) for k in keymap), default=-1) + 1
+    # from the FULL prior map: a dropped name's key stays retired
+    next_idx = max((int(k, 16) for k in prior), default=-1) + 1
     for n in sorted(name_set - taken):
         # 2-hex keys through 255, then 3-hex — the stdout budget math in
         # main() caps the fine tier anyway; test_bench_line pins the ladder

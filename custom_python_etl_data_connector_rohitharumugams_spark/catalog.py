@@ -8,10 +8,10 @@ filters, broadcastable dims, partial aggregation), not in the loader.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import memo
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -29,20 +29,6 @@ TABLES: tuple[str, ...] = (
 #: dimension tables small enough to broadcast at ANY scale factor (region and
 #: nation are fixed-size; supplier/part grow with sf but stay dim-sized).
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
-
-
-#: per-session DataFrame cache. ``spark.read.parquet`` costs a driver-side
-#: file listing + footer read (~60 ms measured) on EVERY call; a query suite
-#: re-resolving the same ten read-only tables hundreds of times pays tens of
-#: seconds for nothing. A real deployment fronts the lake with a metastore
-#: that caches exactly this metadata — this dict is the local-mode
-#: equivalent. Keyed weakly by session so a stopped session's entries die
-#: with it; DataFrames are immutable plans, so sharing one across queries is
-#: safe. The fixture dirs are read-only by contract (TESTDATA.md), so
-#: staleness cannot arise.
-_RESOLVED: "WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    WeakKeyDictionary()
-)
 
 
 def ts_lit(s: str):
@@ -70,8 +56,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table with engine-standard typing (cached per
-    session — see ``_RESOLVED``).
+    """Load one fixture table with engine-standard typing (memoized per
+    session, see ``session.memo``).
 
     ``events.ts`` has shipped in two physical shapes across fixture
     generations: parquet TIMESTAMP(NANOS) (Spark reads it only as a
@@ -82,22 +68,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pinned to UTC, NTZ->TimestampType reinterpretation and ns->us integer
     truncation both match DuckDB ``epoch()`` exactly (oracle parity).
     """
-    try:
-        cache = _RESOLVED.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable: skip caching
-        cache = None
-    key = (sf_dir.rstrip("/"), name)
-    if cache is not None and key in cache:
-        return cache[key]
+    def resolve() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if cache is not None:
-        cache[key] = df
-    return df
+    # ``spark.read.parquet`` costs a driver-side file listing + footer read
+    # (~60 ms measured) on EVERY call; a query suite re-resolving the same
+    # ten read-only tables hundreds of times pays tens of seconds for
+    # nothing — the metastore-cache equivalent (TESTDATA.md: read-only dirs)
+    return memo(spark, ("table", sf_dir.rstrip("/"), name), resolve)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

@@ -31,14 +31,13 @@ learn the merge table FROM the corpus. Scale shape, stated precisely:
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as T
+from ..session import memo
 
 #: merge rounds stop early when the best pair's corpus frequency falls
 #: below this floor — merging hapax pairs memorizes the corpus tail
@@ -386,16 +385,6 @@ def bpe_apply(
     )
 
 
-#: per-corpus-frame cache of trained merge tables, keyed weakly by the docs
-#: DataFrame (catalog.load_table returns ONE frame per (sf_dir, table) per
-#: session) — the same driver-resident-model reuse contract as
-#: similarity._LEARNED_CELLS: training is eager and deterministic, so the
-#: train query and the corpus-tokenize query share one training run instead
-#: of each re-running the merge rounds. The cached value is a kilobyte-scale
-#: python list; entries die with the frame (and the session).
-_TRAINED: "WeakKeyDictionary[DataFrame, dict[tuple, tuple]]" = WeakKeyDictionary()
-
-
 def trained_merges(
     docs: DataFrame,
     n_merges: int,
@@ -404,23 +393,19 @@ def trained_merges(
 ) -> tuple[list[tuple[str, str, int]], list[int], int]:
     """Train (or reuse) the merge table for a corpus frame: returns
     ``(merges, pair_totals, n_words)`` from :func:`bpe_train` over
-    :func:`word_counts`, cached per (frame, params). ``n_words`` (the
-    vocabulary size) rides the cache so callers never re-scan the corpus
-    just to count distinct words — the count reads the already-persisted
-    word state before it is dropped."""
-    key = (n_merges, text_col, min_pair_freq)
-    try:
-        cache = _TRAINED.setdefault(docs, {})
-    except TypeError:  # frame not weak-referenceable: train uncached
-        cache = None
-    got = cache.get(key) if cache is not None else None
-    if got is None:
+    :func:`word_counts`, memoized per (frame, params) — training is eager
+    and deterministic, so the train query and the corpus-tokenize query
+    share one run of the merge rounds; the kept value is a kilobyte-scale
+    list. ``n_words`` (the vocabulary size) rides the memo so callers
+    never re-scan the corpus just to count distinct words — the count
+    reads the already-persisted word state before it is dropped."""
+
+    def train() -> tuple[list[tuple[str, str, int]], list[int], int]:
         merges, state, totals = bpe_train(
             word_counts(docs, text_col), n_merges, min_pair_freq
         )
         n_words = state.count()  # reads the persisted final state
         state.unpersist()  # the model is the merge list; drop the word state
-        got = (merges, totals, n_words)
-        if cache is not None:
-            cache[key] = got
-    return got
+        return merges, totals, n_words
+
+    return memo(docs, ("bpe_merges", n_merges, text_col, min_pair_freq), train)

@@ -14,12 +14,12 @@ from __future__ import annotations
 
 import math
 import os
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, dot, norm
+from ..session import memo
 
 
 def cosine_topk(
@@ -759,30 +759,6 @@ def ivf_learned_topk(
     )
 
 
-#: per-corpus-frame cache of trained cell maps, keyed weakly by the corpus
-#: DataFrame (catalog.load_table returns ONE frame per (sf_dir, table) per
-#: session, so the learned-ANN queries and semantic_dedup share entries).
-#: kmeans_train is EAGER (one action per Lloyd's iteration at call time)
-#: and deterministic, so reuse is a pure cost win: without it every
-#: learned-index query retrains an identical quantizer. The cached map is
-#: only (vec_id, cell) — two integer columns, persisted MEMORY_AND_DISK;
-#: at 100 TB this is the "quantizer artifact" a production index stores
-#: beside the data, never the corpus itself. Entries die with the frame
-#: (and thus with the session); training params are part of the key.
-#:
-#: Persist lifetime, stated honestly: callers that pass a THROWAWAY frame
-#: (e.g. semantic_dedup's per-call corpus-union) get no cross-call hit —
-#: the weak entry dies with the frame — but the persist still pays for
-#: itself WITHIN the call (the cap check, split levels, and final GEMM
-#: each re-consume the assignment). Spark's CacheManager holds those
-#: per-call cached blocks until session end (DataFrame persist is not
-#: GC-evicted); each is two integer columns, so the residue is KBs per
-#: call, bounded by run count, never corpus-sized.
-_LEARNED_CELLS: "WeakKeyDictionary[DataFrame, dict[tuple, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
 def learned_cellmap(
     corpus: DataFrame,
     n_lists: int,
@@ -791,25 +767,29 @@ def learned_cellmap(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The trained ``(id_col, __ivf_cell)`` assignment map itself —
-    cached per (corpus frame, params), see ``_LEARNED_CELLS``. Split out
-    of :func:`attach_learned_cells` so persistence (save_pq_index) can
-    write the map without dragging the corpus join along."""
-    key = (n_lists, train_iters, id_col, vec_col)
-    try:
-        cache = _LEARNED_CELLS.setdefault(corpus, {})
-    except TypeError:  # frame not weak-referenceable: train uncached
-        cache = None
-    cellmap = cache.get(key) if cache is not None else None
-    if cellmap is None:
+    memoized per (corpus frame, params). Split out of
+    :func:`attach_learned_cells` so persistence (save_pq_index) can write
+    the map without dragging the corpus join along.
+
+    kmeans_train is EAGER (one action per Lloyd's iteration) and
+    deterministic, so without the memo every learned-index query (and
+    semantic_dedup) would retrain an identical quantizer. The kept map is
+    two integer columns, persisted — the "quantizer artifact" a production
+    index stores beside the data, never the corpus itself. A THROWAWAY
+    corpus frame (semantic_dedup's per-call union) gets no cross-call
+    hit, but the persist still pays within the call (cap check, split
+    levels and final GEMM each re-consume the assignment); Spark holds
+    those KB-sized blocks until session end."""
+
+    def train() -> DataFrame:
         assign, _inertias = kmeans_train(
             corpus, k=n_lists, iters=train_iters, id_col=id_col, vec_col=vec_col
         )
-        cellmap = assign.select(
+        return assign.select(
             F.col("vec_id").alias(id_col), F.col("cid").alias("__ivf_cell")
         ).persist()
-        if cache is not None:
-            cache[key] = cellmap
-    return cellmap
+
+    return memo(corpus, ("learned_cellmap", n_lists, train_iters, id_col, vec_col), train)
 
 
 def attach_learned_cells(
@@ -823,8 +803,8 @@ def attach_learned_cells(
     learned cell as ``__ivf_cell`` — the shared quantizer-fit front end of
     :func:`ivf_learned_topk`, :func:`ivf_pq_learned_topk` and
     :func:`semantic_dedup` (one place defines how assignments become
-    inverted lists). The trained (vec_id, cell) map is cached per
-    (corpus frame, params) — see ``_LEARNED_CELLS``."""
+    inverted lists). The trained (vec_id, cell) map is memoized per
+    (corpus frame, params) — see :func:`learned_cellmap`."""
     return corpus.join(
         learned_cellmap(corpus, n_lists, train_iters, id_col, vec_col), id_col
     )
@@ -1470,21 +1450,20 @@ def opq_rotation(
     The d x d eigendecomposition is driver-side numpy (64 x 64 — trivial
     at any corpus size; d is the embedding width, not the row count).
 
-    The learned matrix is cached per corpus frame (``_OPQ_ROT_MAT``,
-    same weak-key discipline as the rotated-frame cache): the rotation
-    is a deterministic per-corpus artifact, so persistence queries that
-    need R ITSELF (save_pq_index) share the covariance pass with the
-    search queries that only need the rotated frame.
+    The learned matrix (~32 KB at d=64) is memoized per corpus frame:
+    the rotation is a deterministic per-corpus artifact, so persistence
+    queries that need R ITSELF (save_pq_index) share the covariance pass
+    with the search queries that only need the rotated frame.
     """
-    import numpy as np
+    return memo(
+        corpus,
+        ("opq_rotation", vec_col, n_subspaces),
+        lambda: _fit_opq_rotation(corpus, vec_col, n_subspaces),
+    )
 
-    cache_key = (vec_col, n_subspaces)
-    try:
-        mat_cache = _OPQ_ROT_MAT.setdefault(corpus, {})
-    except TypeError:
-        mat_cache = None
-    if mat_cache is not None and cache_key in mat_cache:
-        return mat_cache[cache_key]
+
+def _fit_opq_rotation(corpus: DataFrame, vec_col: str, n_subspaces: int):
+    import numpy as np
 
     d_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
     if d_row is None:
@@ -1536,10 +1515,7 @@ def opq_rotation(
     )
     n = sum(r["n"] for r in parts)
     if n < 2:
-        rot = np.eye(dim)
-        if mat_cache is not None:
-            mat_cache[cache_key] = rot
-        return rot
+        return np.eye(dim)
     s = np.zeros(dim)
     o = np.zeros((dim, dim))
     for r in parts:  # fixed summation order => run-to-run determinism
@@ -1569,27 +1545,7 @@ def opq_rotation(
         )
         buckets[best].append(i)
     rows = [evecs[:, j] for b in buckets for j in b]
-    rot = np.array(rows)  # (dim, dim): rotated = R @ v
-    if mat_cache is not None:
-        mat_cache[cache_key] = rot
-    return rot
-
-
-#: per-corpus cache of the OPQ-rotated frame (same weak-key discipline as
-#: _LEARNED_CELLS): the rotation is a deterministic per-corpus artifact, so
-#: verify + bench re-invocations reuse one covariance pass, one GEMM apply,
-#: and — because attach_learned_cells keys on the rotated FRAME — one
-#: quantizer training. The persisted payload is (id, rotated vector).
-_OPQ_ROTATED: "WeakKeyDictionary[DataFrame, dict[tuple, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-#: per-corpus cache of the learned rotation MATRIX itself (numpy d x d) —
-#: see opq_rotation's docstring; entries are ~32 KB at d=64 and die with
-#: the corpus frame.
-_OPQ_ROT_MAT: "WeakKeyDictionary[DataFrame, dict[tuple, object]]" = (
-    WeakKeyDictionary()
-)
+    return np.array(rows)  # (dim, dim): rotated = R @ v
 
 
 def opq_apply(
@@ -1633,26 +1589,20 @@ def opq_rotate(
 ) -> DataFrame:
     """Corpus projected through the learned OPQ rotation: ``(id_col,
     vec_col)`` with the vector replaced by ``R @ v`` (R from
-    :func:`opq_rotation`, cached per corpus frame — see ``_OPQ_ROTATED``).
-    The apply is a shuffle-free Arrow-batched GEMM (batch x d @ d x d),
-    the same stay-JVM boundary as kmeans_train's large-k assignment."""
-    key = (id_col, vec_col, n_subspaces)
-    try:
-        cache = _OPQ_ROTATED.setdefault(corpus, {})
-    except TypeError:
-        cache = None
-    hit = cache.get(key) if cache is not None else None
-    if hit is not None:
-        return hit
-    rot = opq_rotation(corpus, vec_col=vec_col, n_subspaces=n_subspaces)
-    out = opq_apply(corpus, rot, id_col=id_col, vec_col=vec_col)
-    if cache is not None:
-        # persist ONLY the cacheable frame: a weak-unreferenceable corpus
-        # gets a plain lazy frame — persisting it would orphan JVM cache
-        # blocks on every call (nothing would ever unpersist them)
-        out = out.persist()
-        cache[key] = out
-    return out
+    :func:`opq_rotation`). The apply is a shuffle-free Arrow-batched GEMM
+    (batch x d @ d x d), the same stay-JVM boundary as kmeans_train's
+    large-k assignment.
+
+    The persisted (id, rotated vector) frame is memoized per corpus
+    frame, so verify + bench re-invocations reuse one covariance pass,
+    one GEMM apply and — because :func:`learned_cellmap` keys on the
+    rotated FRAME — one quantizer training."""
+
+    def rotate() -> DataFrame:
+        rot = opq_rotation(corpus, vec_col=vec_col, n_subspaces=n_subspaces)
+        return opq_apply(corpus, rot, id_col=id_col, vec_col=vec_col).persist()
+
+    return memo(corpus, ("opq_rotate", id_col, vec_col, n_subspaces), rotate)
 
 
 def semantic_dedup(

@@ -14,7 +14,7 @@ operators.similarity; additional recall checks live in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
+import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -25,6 +25,7 @@ from ..functions import text as T
 from ..operators import bpe as B
 from ..operators import dedup as D
 from ..operators import similarity as S
+from ..session import memo
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -190,8 +191,7 @@ def llm_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted, not unpersisted: the final agg's plan consumes the
     # transliterated frame three times (profile build + predict + grade);
     # the cached block is two small columns + the stripped script string,
-    # deduped by logical plan across bench reruns — same session-artifact
-    # discipline as _EXACT_TRUTH
+    # deduped by logical plan across bench reruns
     scripted = ok.select(
         "doc_id",
         "lang",
@@ -726,32 +726,19 @@ ANN_RECALL_ORACLE = f"""
 """
 
 
-#: per-corpus cache of the exact ground-truth table every ANN recall query
-#: measures against (same session-artifact discipline as the learned
-#: quantizer's cell map, similarity._LEARNED_CELLS): six registered queries
-#: compare to the IDENTICAL brute-force top-5 of the standard probe set, so
-#: recomputing the Q x N scan per query is pure waste. Bounded: <= Q*k rows
-#: of (ids, rank, sim), persisted; entries die with the corpus frame.
-_EXACT_TRUTH: "WeakKeyDictionary[DataFrame, DataFrame]" = WeakKeyDictionary()
-
-
 def _exact_ground_truth(e: DataFrame) -> DataFrame:
     """Exact cosine top-5 of the standard probe set (vec_id < 20) over
-    corpus ``e`` — cached per corpus frame, see ``_EXACT_TRUTH``. The
-    standalone llm_cosine_topk query keeps its own uncached plan (its J8
-    crossJoin shape is part of what the audit pins)."""
-    try:
-        cached = _EXACT_TRUTH.get(e)
-    except TypeError:
-        cached = None
-    if cached is not None:
-        return cached
-    truth = S.cosine_topk(e.where(F.col("vec_id") < 20), e, k=5).persist()
-    try:
-        _EXACT_TRUTH[e] = truth
-    except TypeError:
-        pass
-    return truth
+    corpus ``e`` — memoized per corpus frame: six registered ANN recall
+    queries compare to this IDENTICAL brute-force top-5, so recomputing
+    the Q x N scan per query is pure waste (bounded: <= Q*k rows of (ids,
+    rank, sim), persisted). The standalone llm_cosine_topk query keeps its
+    own unmemoized plan (its J8 crossJoin shape is part of what the audit
+    pins)."""
+    return memo(
+        e,
+        ("exact_truth",),
+        lambda: S.cosine_topk(e.where(F.col("vec_id") < 20), e, k=5).persist(),
+    )
 
 
 def _ann_recall_report(
@@ -1005,7 +992,7 @@ def llm_ann_ivf_pq_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-resident-centers contract) and applied as a shuffle-free
     Arrow GEMM; everything downstream is the unchanged learned-IVF-PQ
     plan. The rotated frame and its trained quantizer are per-corpus
-    session artifacts (similarity._OPQ_ROTATED / _LEARNED_CELLS)."""
+    session artifacts (memoized by similarity.opq_rotate / learned_cellmap)."""
     e = load_table(spark, sf_dir, "embeddings")
     er = S.opq_rotate(e)
     q = er.where(F.col("vec_id") < 20)
@@ -1019,47 +1006,29 @@ def llm_ann_ivf_pq_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: per-corpus cache of the frozen quantizer (same session-artifact
-#: discipline as _EXACT_TRUTH / similarity._LEARNED_CELLS): five
-#: registered queries train the IDENTICAL quantizer — deterministic
-#: recipe, deterministic result — so re-running Lloyd's per query is
-#: pure waste. load_table returns one frame per (session, sf, table),
-#: which is what makes the WeakKeyDictionary hit across queries; the
-#: entry is k centers of d doubles, dying with the corpus frame.
-_FROZEN_Q: "WeakKeyDictionary[DataFrame, tuple[int, list]]" = WeakKeyDictionary()
-
-
 def _frozen_quantizer(e: DataFrame) -> tuple[int, list]:
     """The frozen-index family's ONE quantizer recipe — sqrt-rule cell
     count from the FULL corpus, trained on the even half (vec_id % 2 ==
     0), 2 Lloyd's iterations. Shared by every frozen-index query
-    (add/drift/delete/compaction/persistence) so the sizing rule cannot
-    drift per call site — and cached per corpus, so it TRAINS once per
-    session (train-once is the family's whole contract)."""
-    import math
+    (add/drift/delete/compaction/persistence) and the streaming index
+    queries (maintenance, mid-stream compaction) so the sizing rule cannot
+    drift per call site — and memoized per corpus, so it TRAINS once per
+    session (train-once is the family's whole contract). The sqrt rule
+    sizes cells for the FULL anticipated population: streamed adds grow
+    the index toward ``e``'s size. The kept artifact is k centers of d
+    doubles."""
 
-    try:
-        cached = _FROZEN_Q.get(e)
-    except TypeError:
-        # Non-hashable / non-weak-referenceable frame (e.g. Spark
-        # Connect proxies): fall back to uncached training, matching
-        # _exact_ground_truth and similarity._LEARNED_CELLS.
-        cached = None
-    if cached is not None:
-        return cached
-    n_lists = max(5, math.ceil(math.sqrt(e.count())))
-    _, _inertias, centers = S.kmeans_train(
-        e.where(F.col("vec_id") % 2 == 0),
-        k=n_lists,
-        iters=2,
-        return_centers=True,
-    )
-    artifact = (n_lists, centers)
-    try:
-        _FROZEN_Q[e] = artifact
-    except TypeError:
-        pass
-    return artifact
+    def train() -> tuple[int, list]:
+        n_lists = max(5, math.ceil(math.sqrt(e.count())))
+        _, _inertias, centers = S.kmeans_train(
+            e.where(F.col("vec_id") % 2 == 0),
+            k=n_lists,
+            iters=2,
+            return_centers=True,
+        )
+        return n_lists, centers
+
+    return memo(e, ("frozen_quantizer",), train)
 
 
 def _planted_twins(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1095,8 +1064,6 @@ def llm_ann_frozen_add_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-data one for the same recall (the probe sweep is in the
     operator docstring) — that probe budget is the price of never
     retraining."""
-    import math
-
     e = load_table(spark, sf_dir, "embeddings")
     n_lists, centers = _frozen_quantizer(e)
     q = e.where(F.col("vec_id") < 20)
@@ -1150,7 +1117,7 @@ def llm_frozen_index_drift_trigger(spark: SparkSession, sf_dir: str) -> DataFram
     _n_lists, centers = _frozen_quantizer(e)
     # the baseline assignment feeds THREE legs (identity compare, min-cell
     # pick, drift batch): persist so the corpus GEMM pass runs once for
-    # them — two integer columns, the _LEARNED_CELLS KB-residue contract.
+    # them — two integer columns, the learned_cellmap KB-residue contract.
     # The identity batch stays a SEPARATE assignment evaluation on
     # purpose: recompute-determinism under the frozen centers is the very
     # claim identity_tv_ppm == 0 certifies
@@ -1511,7 +1478,7 @@ def llm_ann_pq_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     n_lists, nprobe, rerank = S.scaled_pq_budgets(e.count())
-    rot = S.opq_rotation(e)  # cached per corpus (one covariance pass)
+    rot = S.opq_rotation(e)  # memoized per corpus (one covariance pass)
     er = S.opq_rotate(e)  # cached rotated frame (same R, same GEMM)
     cellmap = S.learned_cellmap(er, n_lists, 2)
     corpus_mem = er.join(cellmap, "vec_id")

@@ -1436,7 +1436,7 @@ def llm_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # benchmark side (an external eval set — known up front). Persisted:
     # THREE legs (A, delta, twin) anti-join against it, and the shingle
     # join that derives it is the query's most expensive subtree — a
-    # doc_id-list KB-scale residue, the _LEARNED_CELLS contract
+    # doc_id-list KB-scale residue, the learned_cellmap contract
     contaminated = (
         contamination_pairs(shingle_postings(d, shingle_n=3))
         .select("doc_id")

@@ -13,53 +13,14 @@ struct and DuckDB timestamps don't hash alike.
 
 from __future__ import annotations
 
-import math
 import os
-from contextlib import contextmanager
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import conf_scope
 from .registry import query
-
-#: Frozen coarse quantizer over the EVEN-id base partition — the two
-#: streaming index queries (maintenance, mid-stream compaction) train the
-#: byte-identical quantizer (same base population, same sqrt-rule k, same
-#: iteration count); one Lloyd's run per corpus per session serves both
-#: (the _frozen_quantizer train-once contract of plans/llm.py applied to
-#: the streaming family's base population). Deterministic training means
-#: the cached centers are the exact list either query would derive.
-_EVEN_BASE_QUANT: "WeakKeyDictionary[DataFrame, tuple[int, list]]" = (
-    WeakKeyDictionary()
-)
-
-
-def _even_base_quantizer(e: DataFrame) -> tuple[int, list]:
-    from ..operators import similarity as S
-
-    try:
-        got = _EVEN_BASE_QUANT.get(e)
-    except TypeError:
-        got = None
-    if got is not None:
-        return got
-    # the family sqrt rule sizes cells for the FULL anticipated
-    # population (train-time capacity planning — streamed adds will
-    # grow the index toward e's size), uniform with the frozen-index
-    # siblings in plans/llm.py (_frozen_quantizer)
-    n_lists = max(5, math.ceil(math.sqrt(e.count())))
-    _, _inertias, centers = S.kmeans_train(
-        e.where(F.col("vec_id") % 2 == 0), k=n_lists, iters=2,
-        return_centers=True,
-    )
-    try:
-        _EVEN_BASE_QUANT[e] = (n_lists, centers)
-    except TypeError:
-        pass
-    return n_lists, centers
-
 
 #: State-store partition count for the REAL streaming runs (the
 #: watermark-replay and checkpoint-recovery queries). Structured Streaming
@@ -77,51 +38,36 @@ def _even_base_quantizer(e: DataFrame) -> tuple[int, list]:
 _STREAM_STATE_PARTITIONS = 8
 
 
-@contextmanager
-def _stream_state_conf(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` to the state-store sizing
-    above for the duration of one streaming run (set at plan time, pinned
-    into the checkpoint; restored after termination so batch queries keep
-    the session default).
-
-    ALSO scopes ``spark.sql.adaptive.enabled=false``: with AQE on, every
-    shuffle stage of every per-micro-batch action materializes as its OWN
-    Spark job (plus a re-optimization pass), which on the admission loop
-    measured 295 jobs per run vs 108 with AQE off — identical plans,
-    identical results, ~2.7x the fixed job/scheduling cost. AQE's value
-    (runtime coalescing, skew splits) needs unknown-cardinality shuffles;
-    inside a foreachBatch loop every frame is batch- or candidate-bounded
-    BY CONSTRUCTION (state reads are partition-pruned scans, probes are
-    broadcasts), and the partition count is already pinned by the line
-    above — there is nothing left for AQE to adapt, so its per-stage jobs
-    are pure overhead at every scale. This mirrors Spark's own choice of
-    running the streaming plan itself without AQE. Batch queries outside
-    the scope keep the session's AQE."""
-    keys = (
-        "spark.sql.shuffle.partitions",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.files.minPartitionNum",
-        "spark.sql.leafNodeDefaultParallelism",
-    )
-    prev = {k: spark.conf.get(k, None) for k in keys}
-    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_STATE_PARTITIONS))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # scan split count from BYTES, not core count: the local default
-    # (minPartitionNum = defaultParallelism) shreds the fixture-scale
-    # side tables into 32 near-empty tasks per scan inside every
-    # micro-batch job; 1 lets maxPartitionBytes (128 MB) govern, which
-    # is a no-op at any scale where file bytes dominate (guide §2/§6 —
-    # partitioning derived from input size, not a constant per core)
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
-    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
-    try:
-        yield
-    finally:
-        for key, val in prev.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
+#: Runtime conf for one streaming run, applied with ``conf_scope`` (set at
+#: plan time, pinned into the checkpoint; restored after termination so
+#: batch queries keep the session's conf):
+#:
+#: - ``shuffle.partitions``: the state-store sizing above.
+#: - ``adaptive.enabled=false``: with AQE on, every shuffle stage of every
+#:   per-micro-batch action materializes as its OWN Spark job (plus a
+#:   re-optimization pass), which on the admission loop measured 295 jobs
+#:   per run vs 108 with AQE off — identical plans, identical results,
+#:   ~2.7x the fixed job/scheduling cost. AQE's value (runtime coalescing,
+#:   skew splits) needs unknown-cardinality shuffles; inside a foreachBatch
+#:   loop every frame is batch- or candidate-bounded BY CONSTRUCTION (state
+#:   reads are partition-pruned scans, probes are broadcasts), and the
+#:   partition count is already pinned — there is nothing left for AQE to
+#:   adapt, so its per-stage jobs are pure overhead at every scale. This
+#:   mirrors Spark's own choice of running the streaming plan itself
+#:   without AQE.
+#: - ``files.minPartitionNum`` / ``leafNodeDefaultParallelism`` = 1: scan
+#:   split count from BYTES, not core count. The local default
+#:   (minPartitionNum = defaultParallelism) shreds the fixture-scale side
+#:   tables into 32 near-empty tasks per scan inside every micro-batch
+#:   job; 1 lets maxPartitionBytes (128 MB) govern, which is a no-op at any
+#:   scale where file bytes dominate (guide §2/§6 — partitioning derived
+#:   from input size, not a constant per core).
+_STREAM_STATE_CONF: dict[str, str] = {
+    "spark.sql.shuffle.partitions": str(_STREAM_STATE_PARTITIONS),
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.files.minPartitionNum": "1",
+    "spark.sql.leafNodeDefaultParallelism": "1",
+}
 
 
 def _overlap_with_stream(spark: SparkSession, frames, desc: str):
@@ -204,7 +150,7 @@ def _run_replay_foreachbatch(
     sdf = stream_fn(spark, replay_dir, max_files_per_trigger=1)
     if transform is not None:
         sdf = transform(sdf)
-    with _stream_state_conf(spark):
+    with conf_scope(spark, _STREAM_STATE_CONF):
         q = (
             sdf.writeStream.foreachBatch(sink(log_dir))
             .option("checkpointLocation", cp)
@@ -600,7 +546,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"wm_late_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
     spark.catalog.dropTempView(name)
     cp = tempfile.mkdtemp(prefix="sg_wm_cp_")
-    with _stream_state_conf(spark):
+    with conf_scope(spark, _STREAM_STATE_CONF):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -644,20 +590,17 @@ def _run_replay_to_log(
         # out. Partitioning by batch_id with dynamic overwrite makes the
         # retry replace ITS OWN partition — the idempotent-sink half of
         # the exactly-once contract, same discipline as the docsink upsert.
-        spark = bdf.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with conf_scope(
+            bdf.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        ):
             (
                 bdf.withColumn("batch_id", F.lit(batch_id).cast("long"))
                 .write.mode("overwrite")
                 .partitionBy("batch_id")
                 .parquet(log_dir)
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    with _stream_state_conf(spark):
+    with conf_scope(spark, _STREAM_STATE_CONF):
         q = (
             agg.writeStream.foreachBatch(_sink)
             .outputMode("append")
@@ -1474,16 +1417,17 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole query under the micro-batch fixed-cost scope + eager report
     # (see stream_corpus_admission — same rationale: the loop and its
     # proof legs are job-count-bound, not task-bound)
-    with _stream_state_conf(spark):
+    with conf_scope(spark, _STREAM_STATE_CONF):
         return _ann_maintenance_body(spark, sf_dir)
 
 
 def _ann_maintenance_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as S
+    from .llm import _frozen_quantizer
 
     e = load_table(spark, sf_dir, "embeddings")
     base = e.where(F.col("vec_id") % 2 == 0)
-    n_lists, centers = _even_base_quantizer(e)
+    n_lists, centers = _frozen_quantizer(e)
 
     def _ops(df: DataFrame, etype: str, stride: int) -> DataFrame:
         return _ann_op_ids(df, e, etype, stride)
@@ -1567,7 +1511,7 @@ def _ann_maintenance_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the maintained map and the twin each feed multiple consumers (two
     # exceptAll directions + the maintained-index search); both are
     # (id, cid) integer frames — persist so the Arrow assignment passes
-    # run once, not per consumer (the _LEARNED_CELLS residue contract)
+    # run once, not per consumer (the learned_cellmap residue contract)
     maintained = (
         base_assign.unionByName(add_log)
         .dropDuplicates(["vec_id", "cid"])
@@ -1963,14 +1907,14 @@ def stream_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # The WHOLE query — per-batch loop, from-scratch twin, and the final
     # report — runs under the micro-batch fixed-cost scope (AQE off +
-    # pinned small shuffle grain, see _stream_state_conf): the loop is
+    # pinned small shuffle grain, see _STREAM_STATE_CONF): the loop is
     # job-count-bound, not task-bound (measured 39 s of summed job wall +
     # 27 s of driver gaps across 295 jobs at sf0.1 pre-change), so the
     # per-stage jobs AQE adds are the dominant cost. The report is
     # materialized EAGERLY inside the scope (localCheckpoint — the
     # llm_corpus_build_to_shards pattern) so the proof legs execute here
     # too; the returned frame is the k-row result, identical rows.
-    with _stream_state_conf(spark):
+    with conf_scope(spark, _STREAM_STATE_CONF):
         return _corpus_admission_body(spark, sf_dir, d)
 
 
@@ -2437,16 +2381,17 @@ def stream_ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift monitor)."""
     # whole query under the micro-batch fixed-cost scope + eager report
     # (see stream_corpus_admission — same rationale)
-    with _stream_state_conf(spark):
+    with conf_scope(spark, _STREAM_STATE_CONF):
         return _ann_compaction_body(spark, sf_dir)
 
 
 def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as S
+    from .llm import _frozen_quantizer
 
     e = load_table(spark, sf_dir, "embeddings")
     base = e.where(F.col("vec_id") % 2 == 0)
-    n_lists, centers = _even_base_quantizer(e)
+    n_lists, centers = _frozen_quantizer(e)
     base_assign = S.assign_to_centers(base, centers).select(
         "vec_id", F.col("cid").cast("long").alias("cid")
     )

@@ -10,8 +10,22 @@ long instead of erroring (catalog.py normalizes every shape to TimestampType).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator, Mapping, TypeVar
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
+
+
+def driver_heap(phys_bytes: int) -> str:
+    """Driver heap for a host with ``phys_bytes`` of RAM: half of it,
+    capped at 64 GB. The other half is left to the Python workers, the
+    page cache and the JVM's off-heap buffers; a heap sized past physical
+    RAM lets the JVM grow until the kernel's OOM-killer ends it."""
+    return f"{min(64 << 10, phys_bytes // 2 >> 20)}m"
+
 
 #: Static conf — only applies when THIS process launches the JVM (bench,
 #: pytest, CLI). Spark's local-mode default is a 1 GiB driver heap, which on
@@ -19,10 +33,13 @@ from pyspark.sql import SparkSession
 #: and Arrow batch contends for the same ~1 GiB — measured here as multi-
 #: second GC stalls that turned 2-s queries into 26-s outliers. A real
 #: cluster sizes executor memory explicitly; this is the local-mode
-#: equivalent. Kept separate from ENGINE_CONF because it cannot be applied
-#: to a live session (builder-time only).
+#: equivalent, sized from the host (:func:`driver_heap`). Kept separate
+#: from ENGINE_CONF because it cannot be applied to a live session
+#: (builder-time only).
 STATIC_CONF: dict[str, str] = {
-    "spark.driver.memory": "64g",
+    "spark.driver.memory": driver_heap(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    ),
     "spark.driver.maxResultSize": "4g",
 }
 
@@ -83,3 +100,51 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass
     return spark
+
+
+_MEMO: "WeakKeyDictionary[Any, dict[tuple, Any]]" = WeakKeyDictionary()
+
+
+def memo(owner: Any, key: tuple, build: Callable[[], _T]) -> _T:
+    """Return the session artifact ``key`` of ``owner``, running ``build``
+    only on the first call — the ONE memo for every artifact the engine
+    keeps across queries (resolved tables, trained quantizers, rotations,
+    merge tables, ground truth, written layouts).
+
+    ``owner`` is the SparkSession, SparkContext or corpus DataFrame the
+    artifact derives from; it is held WEAKLY, so an entry dies with its
+    owner (a stopped session, a dropped corpus frame) and never outlives
+    the data it describes. ``catalog.load_table`` returns ONE frame per
+    (session, sf_dir, table), which is what makes a corpus-keyed entry hit
+    across queries. ``key`` starts with the artifact's name, then its
+    build parameters, so two artifacts of one owner cannot collide.
+
+    Only deterministic, immutable-input artifacts belong here: a hit
+    returns the first build's value as-is (DataFrames are immutable plans
+    and the fixture inputs are read-only, so staleness cannot arise). A
+    ``build`` that raises stores nothing. There is no lock: builds run on
+    the query's driver thread, and two racing first calls would only
+    build twice and keep one result."""
+    entries = _MEMO.setdefault(owner, {})
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, settings: Mapping[str, str]) -> Iterator[None]:
+    """Apply runtime ``settings`` for the body only. On exit — also when
+    the body raises — each key gets back its previous value, or is unset
+    if the session had none, so the scope leaves no trace in later
+    queries' plans."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

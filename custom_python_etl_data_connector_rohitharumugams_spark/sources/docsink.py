@@ -22,8 +22,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+
 BUCKET_COL = "__bucket"
 INGESTED_COL = "ingested_at"
+#: upserts and compaction swap only the bucket directories they write
+_DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 _META_FILE = "_docsink_meta.json"
 
 
@@ -169,16 +173,8 @@ def write_collection(
             .where(F.col("__rn") == 1)
             .drop("__rn", "__is_new")
         )
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                deduped.write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        with conf_scope(spark, _DYNAMIC_OVERWRITE):
+            deduped.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
     finally:
         stamped.unpersist()
     _write_meta(path, n_buckets, key_col)
@@ -263,17 +259,13 @@ def compact_collection(
     if buckets is not None:
         rows = rows.where(F.col(BUCKET_COL).isin(list(buckets)))
         shuffle_parts = max(1, len(buckets))
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, _DYNAMIC_OVERWRITE):
         (
             rows.repartition(shuffle_parts, F.col(BUCKET_COL))
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     return sum(
         1
         for root, _, files in os.walk(path)

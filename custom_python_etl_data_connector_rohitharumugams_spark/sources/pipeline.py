@@ -25,6 +25,7 @@ from ..functions.json_utils import (
     drop_empty_payloads,
     sanitize_field_names,
 )
+from ..session import memo
 from .docsink import write_collection
 from .restapi import RestApiDataSource
 
@@ -55,25 +56,25 @@ class ConnectorConfig:
     sink_buckets: int = 16
 
 
-_SHIPPED: set[str] = set()
-
-
 def _ship_package(spark: SparkSession) -> None:
-    """Make this package importable in executor-side Python workers.
+    """Make this package importable in executor-side Python workers, once
+    per Spark application (memoized on its SparkContext).
 
     The Python DataSource class is cloudpickled BY REFERENCE, so workers must
     be able to import the package — which fails whenever the driver wasn't
     launched from the repo root. addPyFile distributes a zip of the package
     and prepends it to every worker's sys.path (works post-session-start)."""
+    sc = spark.sparkContext
+    memo(sc, ("shipped_package",), lambda: _zip_and_add_package(sc))
+
+
+def _zip_and_add_package(sc) -> None:
     import tempfile
     import zipfile
 
     from .. import __version__
     import custom_python_etl_data_connector_rohitharumugams_spark as pkg
 
-    app_id = spark.sparkContext.applicationId
-    if app_id in _SHIPPED:
-        return
     pkg_dir = Path(pkg.__file__).parent
     sources = sorted(pkg_dir.rglob("*.py"))
     # content-derived cache key: a version-only key would keep shipping a
@@ -88,8 +89,7 @@ def _ship_package(spark: SparkSession) -> None:
         with zipfile.ZipFile(zpath, "w") as zf:
             for py in sources:
                 zf.write(py, arcname=str(py.relative_to(pkg_dir.parent)))
-    spark.sparkContext.addPyFile(str(zpath))
-    _SHIPPED.add(app_id)
+    sc.addPyFile(str(zpath))
 
 
 def register_sources(spark: SparkSession) -> None:

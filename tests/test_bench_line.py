@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 import bench
 from custom_python_etl_data_connector_rohitharumugams_spark.plans import all_queries
 
@@ -63,6 +65,30 @@ def test_keymap_frozen_across_rounds_and_appends_new_names(tmp_path):
     # dropped name leaves a hole; its key is not reused by a new name
     got2 = bench.resolve_keymap(["alpha", "zulu", "charlie"], tmp_path)
     assert got2 == {"00": "alpha", "02": "zulu", "03": "charlie"}
+
+
+def test_keymap_never_reuses_the_dropped_max_key(tmp_path):
+    """A name dropped while holding the MAX key must retire that key too:
+    seeding the next key from the pruned map would hand zulu's '02' to
+    charlie and misalign the round-over-round per-query table."""
+    prior = {"00": "alpha", "01": "mike", "02": "zulu"}
+    (tmp_path / "BENCH_KEYMAP_r13.json").write_text(
+        json.dumps({"round": 13, "keymap": prior})
+    )
+    got = bench.resolve_keymap(["alpha", "mike", "charlie"], tmp_path)
+    assert got == {"00": "alpha", "01": "mike", "03": "charlie"}
+
+
+def test_keymap_corrupt_newest_sidecar_fails_loudly(tmp_path):
+    """A truncated newest sidecar must raise and name the file, never fall
+    back to an empty map (that re-keys every query alphabetically)."""
+    (tmp_path / "BENCH_KEYMAP_r12.json").write_text(
+        json.dumps({"round": 12, "keymap": {"00": "alpha"}})
+    )
+    bad = tmp_path / "BENCH_KEYMAP_r13.json"
+    bad.write_text(json.dumps({"round": 13, "keymap": {"00": "alpha"}})[:20])
+    with pytest.raises(RuntimeError, match="BENCH_KEYMAP_r13.json"):
+        bench.resolve_keymap(["alpha"], tmp_path)
 
 
 def test_keymap_matches_committed_round13_assignments():

@@ -1200,13 +1200,14 @@ def test_ivf_index_save_load_roundtrip_bit_exact(spark, tmp_path):
 def test_frozen_quantizer_trains_once_per_corpus(spark, sf_dir):
     """The frozen family's train-once contract applied to the harness
     itself: the second _frozen_quantizer call on the same corpus frame
-    must hit the _FROZEN_Q cache — ZERO new Spark jobs — and return the
+    must hit the session memo — ZERO new Spark jobs — and return the
     identical object. Five registered queries share this quantizer, so
     a cache regression would silently re-run Lloyd's per query."""
     from custom_python_etl_data_connector_rohitharumugams_spark.plans import llm as L
 
-    e = load_table(spark, sf_dir, "embeddings")
-    L._FROZEN_Q.pop(e, None)  # isolate from other tests in this session
+    # a fresh derived frame owns no memo entry yet: isolated from every
+    # other test's quantizer on the shared table frame
+    e = load_table(spark, sf_dir, "embeddings").select("*")
     sc = spark.sparkContext
 
     def jobs_for(group: str):

@@ -1141,3 +1141,100 @@ def test_jpeg_tolerance_decode_gates_real_lossy_error_and_contains(spark):
     # 602 decodes fine (it IS a valid JPEG) but against doc 602's
     # reference pixels the error blows past the theorem bound
     assert 602 in out and not out[602].within_bound
+
+
+def test_memo_second_call_runs_no_build_and_no_spark_job(spark):
+    """The one session memo: a hit must neither re-run ``build`` nor
+    start a Spark job (every memoized artifact is an eager training or
+    scan whose whole point is being paid once)."""
+    from custom_python_etl_data_connector_rohitharumugams_spark.session import memo
+
+    owner = spark.range(50).select("*")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return owner.count()
+
+    sc = spark.sparkContext
+
+    def jobs_for(group: str):
+        sc.setJobGroup(group, "memo-pin")
+        try:
+            out = memo(owner, ("memo-probe", 50), build)
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, j1 = jobs_for("memo-pin-1")
+    second, j2 = jobs_for("memo-pin-2")
+    assert (first, second) == (50, 50)
+    assert len(builds) == 1
+    assert j1 > 0 and j2 == 0, (j1, j2)
+
+
+def test_memo_entry_dies_with_its_owner(spark):
+    """Entries are held weakly by their owner frame: dropping the frame
+    drops the artifact, so a memo never outlives the data it describes."""
+    import gc
+    import weakref
+
+    from custom_python_etl_data_connector_rohitharumugams_spark.session import memo
+
+    class Artifact:
+        pass
+
+    owner = spark.range(3).select("*")
+    artifact = weakref.ref(memo(owner, ("gc-probe",), Artifact))
+    assert artifact() is not None
+    del owner
+    gc.collect()
+    assert artifact() is None
+
+
+def test_conf_scope_restores_set_and_unset_keys_when_body_raises(spark):
+    """On a raising body the scope must put a key that had a value back
+    to that value, and UNSET a key that had none (not pin it to a
+    default), so no scoped setting leaks into later queries."""
+    from custom_python_etl_data_connector_rohitharumugams_spark.session import conf_scope
+
+    was_set, was_unset = "spark.sql.shuffle.partitions", "spark.sql.leafNodeDefaultParallelism"
+    before = spark.conf.get(was_set)
+    assert spark.conf.get(was_unset, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_scope(spark, {was_set: "3", was_unset: "1"}):
+            assert (spark.conf.get(was_set), spark.conf.get(was_unset)) == ("3", "1")
+            raise RuntimeError("body failed")
+    assert spark.conf.get(was_set) == before
+    assert spark.conf.get(was_unset, None) is None
+
+
+def test_session_artifacts_and_conf_scopes_live_only_in_session_module():
+    """One memo and one conf scope: a new ``WeakKeyDictionary`` cache or
+    hand-written ``spark.conf.get`` save/restore block anywhere but
+    session.py re-opens the copies this module replaced."""
+    from pathlib import Path
+
+    import custom_python_etl_data_connector_rohitharumugams_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = [
+        f"{p.relative_to(root)}: {needle}"
+        for p in sorted(root.rglob("*.py"))
+        if p.name != "session.py" or p.parent != root
+        for needle in ("WeakKeyDictionary", "spark.conf.get(")
+        if needle in p.read_text()
+    ]
+    assert offenders == []
+
+
+@pytest.mark.parametrize(
+    "phys_gb, heap",
+    [(16, "8192m"), (256, "65536m")],
+)
+def test_driver_heap_is_half_of_ram_capped_at_64g(phys_gb, heap):
+    """The driver heap comes from the host: half of physical RAM (a 16 GB
+    host must not get a heap its kernel OOM-kills), capped at 64 GB."""
+    from custom_python_etl_data_connector_rohitharumugams_spark.session import driver_heap
+
+    assert driver_heap(phys_gb << 30) == heap
