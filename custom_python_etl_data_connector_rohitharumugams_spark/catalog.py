@@ -8,6 +8,9 @@ filters, broadcastable dims, partial aggregation), not in the loader.
 
 from __future__ import annotations
 
+import hashlib
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,6 +82,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # ten read-only tables hundreds of times pays tens of seconds for
     # nothing — the metastore-cache equivalent (TESTDATA.md: read-only dirs)
     return memo(spark, ("table", sf_dir.rstrip("/"), name), resolve)
+
+
+def path_tag(sf_dir: str) -> str:
+    """Name tag for what is written from ``sf_dir``: its basename plus a
+    hash of the FULL resolved path — two corpora both named "sf1" must not
+    share written tables (and the /tmp path must not collide across
+    concurrent test processes)."""
+    resolved = Path(sf_dir.rstrip("/")).resolve()
+    digest = hashlib.md5(str(resolved).encode()).hexdigest()[:8]
+    return f"{resolved.name.replace('.', '_')}_{digest}"
+
+
+def sym_diff_count(a: DataFrame, b: DataFrame, name: str) -> DataFrame:
+    """One-row frame whose column ``name`` counts the rows in exactly one
+    of ``a`` and ``b``, duplicates included (``exceptAll`` both ways): 0
+    iff the two frames are equal as multisets. The in-plan equality proof
+    of the twin-checked queries — computed in the plan, never collected."""
+    return (
+        a.exceptAll(b)
+        .unionByName(b.exceptAll(a))
+        .agg(F.count(F.lit(1)).alias(name))
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

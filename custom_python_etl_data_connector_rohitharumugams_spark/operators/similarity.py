@@ -58,21 +58,12 @@ def cosine_topk(
     c = corpus.select(*c_cols).withColumn("__cn", norm(F.col("c_vec")))
     if broadcast_queries:
         q = F.broadcast(q)
-    sim = F.round(
-        dot(F.col("q_vec"), F.col("c_vec")) / (F.col("__qn") * F.col("__cn")), 6
-    )
     not_self = F.col("query_id") != F.col("neighbor_id")
     if filter_col is not None:
         joined = q.join(c, (F.col("__qf") == F.col("__cf")) & not_self)
     else:
         joined = q.crossJoin(c).where(not_self)
-    scored = joined.select("query_id", "neighbor_id", sim.alias("sim"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 4).alias("sim"))
-    )
+    return _exact_rerank(joined, k)
 
 
 def benchmark_decontamination(
@@ -424,14 +415,23 @@ def cosine_near_pairs(
 
 
 def _ivf_corpus(
-    corpus: DataFrame, id_col: str, vec_col: str, list_col: str
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    list_col: str,
+    codes_col: str | None = None,
 ) -> DataFrame:
-    """Corpus normalized to IVF shape: (neighbor_id, c_vec, ivf_list, __cn)."""
-    return corpus.select(
+    """Corpus normalized to IVF shape: (neighbor_id, c_vec, ivf_list, __cn),
+    plus ``__codes`` after ``ivf_list`` when ``codes_col`` names stored PQ
+    codes."""
+    cols = [
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         F.col(list_col).alias("ivf_list"),
-    ).withColumn("__cn", norm(F.col("c_vec")))
+    ]
+    if codes_col is not None:
+        cols.append(F.col(codes_col).alias("__codes"))
+    return corpus.select(*cols).withColumn("__cn", norm(F.col("c_vec")))
 
 
 def _ivf_centroids(c: DataFrame) -> DataFrame:
@@ -480,8 +480,8 @@ def _ivf_probed(
 
 def _exact_rerank(cands: DataFrame, k: int) -> DataFrame:
     """Exact-cosine top-k over a candidate frame carrying q_vec/__qn and
-    c_vec/__cn — the shared tail of every ANN variant (rank on round-6 sim,
-    id tiebreak, emit round-4)."""
+    c_vec/__cn — the shared tail of every top-k search, exact, LSH and IVF
+    alike (rank on round-6 sim, id tiebreak, emit round-4)."""
     sim = F.round(
         dot(F.col("q_vec"), F.col("c_vec")) / (F.col("__qn") * F.col("__cn")), 6
     )
@@ -494,33 +494,6 @@ def _exact_rerank(cands: DataFrame, k: int) -> DataFrame:
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("sim", 4).alias("sim"))
     )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    list_col: str = "label",
-) -> DataFrame:
-    """IVF-style approximate top-k: the corpus is partitioned into inverted
-    lists (here the ``label`` column is the coarse quantizer; production
-    would assign k-means cells the same way), each list summarized by its
-    centroid. A query scores the handful of centroids, probes the top
-    ``nprobe`` lists, and ranks only those lists' vectors — scan cost is
-    nprobe/n_lists of the corpus instead of all of it.
-
-    Everything is DataFrame ops: centroids via posexplode+avg (JVM), probe
-    selection and candidate scoring via broadcast joins + top-k windows.
-    """
-    c = _ivf_corpus(corpus, id_col, vec_col, list_col)
-    probed = _ivf_probed(queries, _ivf_centroids(c), nprobe, id_col, vec_col)
-    cands = probed.join(c, "ivf_list").where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return _exact_rerank(cands, k)
 
 
 #: PQ codebook shared by the encode query and the IVF-PQ search: 4 subspaces
@@ -630,60 +603,62 @@ def pq_encode(
     )
 
 
-def ivf_pq_topk(
+def ivf_search(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    rerank: int = 40,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    *,
+    k: int,
+    nprobe: int,
+    rerank: int | None = None,
+    cells: DataFrame | None = None,
     list_col: str = "label",
     codebooks=None,
     codes_col: str | None = None,
     centroids: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-PQ approximate top-k — the full compressed-index search:
+    """IVF approximate top-k — the one search pipeline every IVF variant is
+    a setting of:
 
-    1. coarse stage: probe the top ``nprobe`` inverted lists (shared with
-       :func:`ivf_topk`);
-    2. PQ-ADC stage: candidates are ranked by an asymmetric-distance
-       lookup — each query precomputes a 4x4 table of
+    1. coarse stage: the corpus is partitioned into inverted lists, each
+       summarized by its centroid (per-dimension mean via posexplode+avg);
+       a query scores the handful of centroids and probes its top
+       ``nprobe`` lists, so the scan costs nprobe/n_lists of the corpus.
+       The lists are the ``list_col`` column (a metadata label), or, with
+       ``cells``, the ``cid`` of a cell map joined onto the corpus by its
+       ``id_col``: learned (:func:`learned_cellmap`), frozen
+       (:func:`assign_to_centers` — the FAISS train-once / add-forever
+       pattern) or loaded (:func:`load_ivf_index`). A deleting index
+       searches ``mask_tombstones(corpus, log)``.
+    2. PQ-ADC stage, only with ``rerank``: candidates are ranked by an
+       asymmetric-distance lookup — each query precomputes a table of
        dot(query-subvector, center) and a candidate's approximate score is
-       4 table lookups via its stored codes (4 small ints), never its
-       vector — and only the top ``rerank`` per query survive;
-    3. exact stage: survivors are re-scored with true cosine (shared
-       :func:`_exact_rerank` tail, same ranking discipline as every other
-       ANN variant).
+       one table lookup per subspace via its codes, never its vector — and
+       only the top ``rerank`` per query survive. With ``rerank=None`` the
+       stage is absent from the plan.
+    3. exact stage: survivors are re-scored with true cosine (the shared
+       :func:`_exact_rerank` tail).
 
-    At 100 TB this is the memory story of a vector index: the ADC stage
+    At 100 TB the ADC stage is the memory story of a vector index: it
     touches ONLY codes (4 bytes/vector) and the per-query table, so the
-    probed lists stream compressed; full vectors are read for
-    ``rerank`` rows per query, not per candidate.
+    probed lists stream compressed; full vectors are read for ``rerank``
+    rows per query, not per candidate.
 
-    The three optional inputs make the LOADED-index search real
+    The remaining inputs make a LOADED index search real
     (:func:`load_pq_index`): ``codes_col`` names a corpus column holding
-    already-encoded codes (skip the encode expression — a reloaded index
-    must never re-derive its payload from raw vectors), ``codebooks``
-    supplies per-subspace center tables from the artifact, and
-    ``centroids`` is a stored ``(ivf_list, centroid)`` routing frame that
-    replaces the corpus-derived per-cell means — probe routing then
-    touches only artifact state.
+    already-encoded codes (a reloaded index must never re-derive its
+    payload from raw vectors), ``codebooks`` supplies per-subspace center
+    tables from the artifact, and ``centroids`` is a stored
+    ``(ivf_list, centroid)`` routing frame that replaces the
+    corpus-derived per-cell means.
     """
+    if cells is not None:
+        corpus, list_col = corpus.join(cells.select(id_col, "cid"), id_col), "cid"
+    c = _ivf_corpus(corpus, id_col, vec_col, list_col, codes_col)
     cbs = _pq_codebooks(codebooks)
-    n_sub = len(cbs)
-    sub_dims = len(cbs[0][0])
-    if codes_col is None:
-        c = _ivf_corpus(corpus, id_col, vec_col, list_col).withColumn(
-            "__codes", pq_codes(F.col("c_vec"), cbs)
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col(list_col).alias("ivf_list"),
-            F.col(codes_col).alias("__codes"),
-        ).withColumn("__cn", norm(F.col("c_vec")))
+    if rerank is not None and codes_col is None:
+        c = c.withColumn("__codes", pq_codes(F.col("c_vec"), cbs))
     cent = (
         _ivf_centroids(c)
         if centroids is None
@@ -692,6 +667,15 @@ def ivf_pq_topk(
         )
     )
     probed = _ivf_probed(queries, cent, nprobe, id_col, vec_col)
+    if rerank is None:
+        return _exact_rerank(
+            probed.join(c, "ivf_list").where(
+                F.col("query_id") != F.col("neighbor_id")
+            ),
+            k,
+        )
+    n_sub = len(cbs)
+    sub_dims = len(cbs[0][0])
     # per-query ADC lookup table: table[m][cidx] = dot(q_sub_m, center_cidx)
     table = F.array(
         *[
@@ -722,43 +706,6 @@ def ivf_pq_topk(
     return _exact_rerank(cands, k)
 
 
-def ivf_learned_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    n_lists: int = 10,
-    train_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """End-to-end learned IVF: train the coarse quantizer with
-    :func:`kmeans_train` (Lloyd's over the corpus), attach each corpus
-    vector's learned cell id as its inverted list, then run the shared
-    :func:`ivf_topk` probe/scan/rerank over the LEARNED partition instead
-    of a metadata column — the production IVF shape, where the quantizer
-    is fit to the data rather than borrowed from a label.
-
-    Scale shape: training is the documented kmeans_train contract (one
-    shuffle per iteration, k centroid rows to the driver — MLlib's
-    contract); the assignment frame joins back to the corpus on the id
-    column (one co-partitioned equi-join) and everything downstream is the
-    unchanged ivf_topk plan. At 100 TB the quantizer would be trained on a
-    sample and the assignment becomes a shuffle-free literal-centers
-    projection — both paths exist in kmeans_train already.
-    """
-    learned = attach_learned_cells(corpus, n_lists, train_iters, id_col, vec_col)
-    return ivf_topk(
-        queries,
-        learned,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        list_col="__ivf_cell",
-    )
-
-
 def learned_cellmap(
     corpus: DataFrame,
     n_lists: int,
@@ -766,10 +713,10 @@ def learned_cellmap(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """The trained ``(id_col, __ivf_cell)`` assignment map itself —
-    memoized per (corpus frame, params). Split out of
-    :func:`attach_learned_cells` so persistence (save_pq_index) can write
-    the map without dragging the corpus join along.
+    """The trained k-means coarse quantizer as a ``(vec_id, cid)`` cell map
+    (the id column keeps the name ``id_col``) — what :func:`ivf_search`
+    takes as ``cells`` and :func:`save_pq_index` persists, memoized per
+    (corpus frame, params).
 
     kmeans_train is EAGER (one action per Lloyd's iteration) and
     deterministic, so without the memo every learned-index query (and
@@ -785,144 +732,29 @@ def learned_cellmap(
         assign, _inertias = kmeans_train(
             corpus, k=n_lists, iters=train_iters, id_col=id_col, vec_col=vec_col
         )
-        return assign.select(
-            F.col("vec_id").alias(id_col), F.col("cid").alias("__ivf_cell")
-        ).persist()
+        return assign.select(F.col("vec_id").alias(id_col), "cid").persist()
 
     return memo(corpus, ("learned_cellmap", n_lists, train_iters, id_col, vec_col), train)
 
 
-def attach_learned_cells(
-    corpus: DataFrame,
-    n_lists: int,
-    train_iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def mask_tombstones(
+    corpus: DataFrame, tombstones: DataFrame, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Train the k-means coarse quantizer and attach each corpus vector's
-    learned cell as ``__ivf_cell`` — the shared quantizer-fit front end of
-    :func:`ivf_learned_topk`, :func:`ivf_pq_learned_topk` and
-    :func:`semantic_dedup` (one place defines how assignments become
-    inverted lists). The trained (vec_id, cell) map is memoized per
-    (corpus frame, params) — see :func:`learned_cellmap`."""
-    return corpus.join(
-        learned_cellmap(corpus, n_lists, train_iters, id_col, vec_col), id_col
-    )
-
-
-def ivf_pq_learned_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    rerank: int = 40,
-    n_lists: int = 10,
-    train_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The fully learned compressed index: k-means coarse quantizer
-    (shared :func:`attach_learned_cells`) + PQ codes + ADC pruning + exact
-    re-rank — :func:`ivf_pq_topk` over LEARNED inverted lists instead of a
-    metadata column. This is the complete production IVF-PQ shape: both
-    the cell structure and the code compression are fit to the data; the
-    probe/ADC/rerank tail is byte-identical to the label-partitioned
-    variant, so the two can never drift in ranking discipline."""
-    learned = attach_learned_cells(corpus, n_lists, train_iters, id_col, vec_col)
-    return ivf_pq_topk(
-        queries,
-        learned,
-        k=k,
-        nprobe=nprobe,
-        rerank=rerank,
-        id_col=id_col,
-        vec_col=vec_col,
-        list_col="__ivf_cell",
-    )
-
-
-def ivf_frozen_add_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centers: list[tuple[int, list[float]]],
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF search over an index built by FROZEN-quantizer addition — the
-    production maintenance pattern (FAISS ``train()`` once, ``add()``
-    forever): every corpus vector, including ones the quantizer never saw
-    at training time, is assigned to its nearest trained center
-    (:func:`assign_to_centers`, shuffle-free) and the shared
-    :func:`ivf_topk` probe/scan/rerank runs over those cells. No Lloyd's
-    iteration touches the full corpus — at 100 TB the quantizer trains on
-    a sample once and ingestion assigns new batches in one narrow pass,
-    which is what keeps a continuously-growing vector index maintainable
-    (retraining would re-shuffle the corpus per batch)."""
-    cellmap = assign_to_centers(corpus, centers, id_col=id_col, vec_col=vec_col).select(
-        F.col("vec_id").alias(id_col), F.col("cid").alias("__ivf_cell")
-    )
-    return ivf_topk(
-        queries,
-        corpus.join(cellmap, id_col),
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        list_col="__ivf_cell",
-    )
-
-
-def _mask_tombstones(
-    corpus: DataFrame, tombstones: DataFrame, id_col: str
-) -> DataFrame:
-    """The one tombstone-mask definition (DELETE verb + compaction share
-    it): left-anti the corpus against the tombstone frame's first column.
-    left_anti is duplicate-tolerant by construction, so a delete log with
-    retries masks identically to its distinct set."""
+    """The DELETE verb of the frozen index (FAISS ``remove_ids`` /
+    IDSelector masking, re-expressed relationally), shared by search and
+    compaction: left-anti the corpus against the tombstone frame's first
+    column. Searching the masked corpus applies the mask BEFORE the probe,
+    so tombstoned vectors never enter a cell scan or a rank window, ranks
+    re-close over the live set, and the index structure (frozen centers,
+    cell assignments) is untouched — deletion costs id-comparison work,
+    never vector movement, until the compaction
+    :func:`tombstone_load_report` schedules. left_anti is
+    duplicate-tolerant by construction, so a delete log with retries
+    masks identically to its distinct set."""
     return corpus.join(
         tombstones.select(F.col(tombstones.columns[0]).alias(id_col)),
         id_col,
         "left_anti",
-    )
-
-
-def ivf_frozen_delete_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centers: list[tuple[int, list[float]]],
-    tombstones: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """DELETE support for the frozen index — the third verb of the index
-    lifecycle after train-once and add-forever (FAISS ``remove_ids`` /
-    IDSelector masking, re-expressed relationally): ``tombstones`` is a
-    1-column frame of deleted ids, and the mask is ONE left-anti join
-    applied BEFORE the probe, so tombstoned vectors never enter a cell
-    scan, a GEMM batch, or a rank window — deletion costs id-comparison
-    work, never vector movement, and the index structure (frozen
-    centers, cell assignments) is untouched. At 100 TB the tombstone set
-    shuffles ids only (or broadcasts while small), which is why deletes
-    stay O(|deletes|) until the compaction the load report below
-    schedules.
-
-    Semantics: exactly :func:`ivf_frozen_add_topk` over the live subset
-    — a deleted id can never be returned, and ranks re-close over the
-    remaining corpus (pytest-pinned against brute force on the live
-    set)."""
-    live = _mask_tombstones(corpus, tombstones, id_col)
-    return ivf_frozen_add_topk(
-        queries,
-        live,
-        centers,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
     )
 
 
@@ -945,7 +777,7 @@ def tombstone_load_report(
 
     The tombstone side is ``distinct()``-ed before the join: a delete
     log plausibly records the same id many times (retries, idempotent
-    re-deletes), and ivf_frozen_delete_topk's left_anti mask tolerates
+    re-deletes), and mask_tombstones's left_anti mask tolerates
     that — but a plain left join would fan each corpus row out once per
     duplicate, misreporting BOTH n_total and n_deleted. An empty corpus
     yields the contained row (0, 0, 0, false) rather than NULL ppm."""
@@ -987,8 +819,8 @@ def ivf_compact(
     the relational form of FAISS's rebuild-after-remove_ids: materialize
     the live set (tombstones dropped for good, so every later scan stops
     paying the mask join and the dead fraction of each cell) and return
-    ``(live_corpus, centers)`` ready for :func:`ivf_frozen_add_topk`
-    with NO tombstone argument — deleted mass back to exactly 0.
+    ``(live_corpus, centers)`` ready for :func:`ivf_search` over the
+    live corpus's frozen cells with NO tombstone mask — deleted mass back to exactly 0.
 
     Two modes, matching how damaged the index is:
 
@@ -1011,7 +843,7 @@ def ivf_compact(
     of the index's storage — exactly the cost profile a production
     rebuild wants; retrain adds the sampled Lloyd's passes
     :func:`kmeans_train` already bounds."""
-    live = _mask_tombstones(corpus, tombstones, id_col)
+    live = mask_tombstones(corpus, tombstones, id_col)
     if not retrain:
         return live, centers
     import math
@@ -1141,8 +973,8 @@ def load_ivf_index(
     spark, path: str
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """LOAD a persisted frozen index (``read_index``): returns
-    ``(cellmap, centers)`` ready for :func:`ivf_topk` /
-    :func:`ivf_frozen_add_topk` — the cell map stays a lazy distributed
+    ``(cellmap, centers)``, the cell map ready for :func:`ivf_search`'s
+    ``cells`` — the cell map stays a lazy distributed
     frame; only the k-row quantizer collects to the driver (the same
     bounded artifact it was at training time)."""
     centers = [
@@ -1168,7 +1000,7 @@ def ivf_centroids_frame(
     list_col: str = "label",
 ) -> DataFrame:
     """Public ``(ivf_list, centroid)`` view of the routing state
-    :func:`ivf_topk` derives internally — the k-row frame a persisted
+    :func:`ivf_search` derives internally — the k-row frame a persisted
     index stores so a LOADED search can route probes without touching
     corpus vectors (see :func:`save_pq_index`)."""
     return _ivf_centroids(_ivf_corpus(corpus, id_col, vec_col, list_col)).select(
@@ -1317,7 +1149,7 @@ def cell_occupancy_drift(
     tv_ppm > threshold_ppm``.
 
     This makes the "train once, add forever — until drift" lifecycle
-    executable: ivf_frozen_add_topk's docstring promises ingestion never
+    executable: a frozen index (:func:`assign_to_centers` cells) never
     retrains, and THIS is the cheap monitor that decides when that
     promise expires. Occupancy is the right drift proxy for an IVF index
     because it is exactly what decays search quality: a drifted
@@ -1617,7 +1449,7 @@ def semantic_dedup(
     max_split_depth: int = 3,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster the embedding space
-    with the learned k-means quantizer (shared :func:`attach_learned_cells`)
+    with the learned k-means quantizer (shared :func:`learned_cellmap`)
     and, WITHIN each cluster only, drop every vector whose cosine to a
     lower-id cluster-mate reaches ``threshold`` (keep-first discipline —
     the survivor is the smallest id, matching the dedup family's
@@ -1687,12 +1519,12 @@ def semantic_dedup(
     n_total = corpus.count()
     k_eff = max(n_clusters, math.ceil(n_total / cap))
 
-    cells = attach_learned_cells(
-        corpus, k_eff, train_iters, id_col, vec_col
+    cells = corpus.join(
+        learned_cellmap(corpus, k_eff, train_iters, id_col, vec_col), id_col
     ).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),
-        F.col("__ivf_cell").alias("cell"),
+        F.col("cid").alias("cell"),
     )
 
     def dedup_cell(key, pdf):
@@ -1913,16 +1745,7 @@ def lsh_topk(
         ).withColumn("__cn", norm(F.col("c_vec"))),
         "neighbor_id",
     )
-    sim = F.round(
-        dot(F.col("q_vec"), F.col("c_vec")) / (F.col("__qn") * F.col("__cn")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 4).alias("sim"))
-    )
+    return _exact_rerank(cand, k)
 
 
 #: above this k, assignment switches from the literal-center-arrays fold
@@ -2045,7 +1868,7 @@ def kmeans_train(
     return_centers: bool = False,
 ) -> tuple:
     """Lloyd's k-means over an embedding column — the coarse-quantizer
-    training step that turns :func:`ivf_topk`'s inverted lists from a given
+    training step that turns :func:`ivf_search`'s inverted lists from a given
     label into a learned partition.
 
     Returns ``(assignments, inertias)``: the final (vec_id, cid, __d2)

@@ -30,16 +30,14 @@ parity rules (plans/registry.py docstring).
 
 from __future__ import annotations
 
-import hashlib
 import re
 import shutil
 import tempfile
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, path_tag
 from ..session import conf_scope, memo
 from .registry import query
 
@@ -659,23 +657,13 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUCKET_N = 8
 
 
-def _path_tag(sf_dir: str) -> str:
-    """Name tag for the layouts written from ``sf_dir``: its basename plus
-    a hash of the FULL resolved path — two corpora both named "sf1" must
-    not share written tables (and the /tmp path must not collide across
-    concurrent test processes)."""
-    resolved = Path(sf_dir.rstrip("/")).resolve()
-    digest = hashlib.md5(str(resolved).encode()).hexdigest()[:8]
-    return f"{resolved.name.replace('.', '_')}_{digest}"
-
-
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> str:
     """Write orders+lineitem co-bucketed on the order key ONCE per
     (session, sf_dir); returns the database name. The write cost is the
     point of the pattern — paid once, every later join on the key is
     shuffle-free — so the memo IS the production shape, not a bench
     trick."""
-    tag = _path_tag(sf_dir)
+    tag = path_tag(sf_dir)
     return memo(spark, ("bucketed_pair", tag), lambda: _write_bucketed_pair(spark, sf_dir, tag))
 
 
@@ -953,7 +941,7 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
     """Write orders hive-partitioned by order month ONCE per
     (session, sf_dir); returns the dataset path."""
-    loc = f"{tempfile.gettempdir()}/sg_partorders_{_path_tag(sf_dir)}"
+    loc = f"{tempfile.gettempdir()}/sg_partorders_{path_tag(sf_dir)}"
     return memo(
         spark, ("partitioned_orders", loc), lambda: _write_partitioned_orders(spark, sf_dir, loc)
     )

@@ -10,7 +10,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, path_tag
 from .registry import query
 
 _FIXTURES = Path(__file__).resolve().parents[2] / "tests" / "fixtures"
@@ -425,20 +425,13 @@ def connector_orc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back scan prunes to the 4 referenced columns via ORC's columnar
     projection exactly as the parquet scans do (PLAN_AUDIT ReadSchema).
     """
-    import hashlib
     import tempfile
 
-    # landing dir keyed by the RESOLVED source path (same scheme as
-    # advanced.py's _bucketed_pair), not the bare basename: two corpora
-    # that share a basename (or two concurrent suites on different
-    # copies) must not overwrite/read each other's ORC landing
-    resolved = str(Path(sf_dir.rstrip("/")).resolve())
-    tag = (
-        Path(resolved).name.replace(".", "_")
-        + "_"
-        + hashlib.md5(resolved.encode()).hexdigest()[:8]
-    )
-    out = f"{tempfile.gettempdir()}/sg_orcland_{tag}"
+    # landing dir keyed by the RESOLVED source path, not the bare
+    # basename: two corpora that share a basename (or two concurrent
+    # suites on different copies) must not overwrite/read each other's
+    # ORC landing
+    out = f"{tempfile.gettempdir()}/sg_orcland_{path_tag(sf_dir)}"
     load_table(spark, sf_dir, "customer").write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("c_mktsegment").agg(
@@ -510,18 +503,11 @@ def _materialize_landing_dir(sf_dir, prefix, ext, n_expected, synth_df):
     shared filesystem, exactly as for those sinks — each task makedirs
     its own view, idempotently. Returns the dir path."""
     import glob as _glob
-    import hashlib
     import os
     import shutil
     import tempfile
 
-    resolved = str(Path(sf_dir.rstrip("/")).resolve())
-    tag = (
-        Path(resolved).name.replace(".", "_")
-        + "_"
-        + hashlib.md5(resolved.encode()).hexdigest()[:8]
-    )
-    out = f"{tempfile.gettempdir()}/{prefix}_{tag}"
+    out = f"{tempfile.gettempdir()}/{prefix}_{path_tag(sf_dir)}"
     if os.path.isdir(out) and len(os.listdir(out)) == n_expected:
         return out
     # fixture setup (not the measured scan). Written into a temp dir and

@@ -19,7 +19,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, path_tag, sym_diff_count
 from ..functions import multimodal as M
 from ..functions import text as T
 from ..operators import bpe as B
@@ -814,7 +814,7 @@ def llm_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     as llm_ann_lsh_topk)."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 20)
-    return _ann_recall_report(_exact_ground_truth(e), S.ivf_topk(q, e, k=5, nprobe=3))
+    return _ann_recall_report(_exact_ground_truth(e), S.ivf_search(q, e, k=5, nprobe=3))
 
 
 @query("llm_ann_ivf_pq_topk", tags=("L3",), oracle=ANN_RECALL_ORACLE)
@@ -833,7 +833,7 @@ def llm_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 20)
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_pq_topk(q, e, k=5, nprobe=3, rerank=120),
+        S.ivf_search(q, e, k=5, nprobe=3, rerank=120),
     )
 
 
@@ -881,7 +881,7 @@ def llm_ann_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END learned IVF: the coarse quantizer is TRAINED (k=10
     k-means cells via operators/similarity.kmeans_train, 2 Lloyd's
     iterations) and its assignments — not the label column — form the
-    inverted lists that ivf_topk probes (nprobe=3). This closes the loop
+    inverted lists that ivf_search probes (nprobe=3). This closes the loop
     the label-partitioned llm_ann_ivf_topk leaves open: quantizer fit,
     cell attachment, probe, and exact re-rank all in one plan. Same
     recall-invariant oracle as the other ANN variants; measured recall at
@@ -891,7 +891,7 @@ def llm_ann_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 20)
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_learned_topk(q, e, k=5, nprobe=3, n_lists=10, train_iters=2),
+        S.ivf_search(q, e, k=5, nprobe=3, cells=S.learned_cellmap(e, 10, 2)),
     )
 
 
@@ -900,15 +900,17 @@ def llm_ann_ivf_pq_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULLY learned compressed index: k-means coarse quantizer (k=10
     cells, 2 Lloyd's iterations) + PQ codes + ADC pruning (top-120
     survivors) + exact re-rank — llm_ann_ivf_pq_topk with the label
-    partition replaced by trained cells (operators/similarity.
-    ivf_pq_learned_topk). Same recall-invariant oracle; measured recall at
+    partition replaced by trained cells (operators/similarity.ivf_search
+    over learned_cellmap cells). Same recall-invariant oracle; measured recall at
     the driver fixture is 0.62 vs the label-partitioned PQ variant's 0.34
     — learned cells recover most of what ADC pruning gives up."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 20)
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_pq_learned_topk(q, e, k=5, nprobe=3, rerank=120, n_lists=10, train_iters=2),
+        S.ivf_search(
+            q, e, k=5, nprobe=3, rerank=120, cells=S.learned_cellmap(e, 10, 2)
+        ),
     )
 
 
@@ -920,7 +922,7 @@ def llm_ann_ivf_pq_hifi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard point's 0.62 — and this query's gate is raised to 0.8
     (hits * 5 >= 4 * n_exact), not the family's 0.25 floor, so the oracle
     row actually pins the high-recall contract. Same quantizer artifact as
-    the other learned queries (shared training via attach_learned_cells);
+    the other learned queries (shared training via learned_cellmap);
     the full recall-vs-cost pareto, including the absolute-budget
     degradation at 10x corpus and how nprobe/rerank must scale with N, is
     recorded in DESIGN.md's IVF-PQ section."""
@@ -928,8 +930,8 @@ def llm_ann_ivf_pq_hifi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 20)
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_pq_learned_topk(
-            q, e, k=5, nprobe=6, rerank=400, n_lists=10, train_iters=2
+        S.ivf_search(
+            q, e, k=5, nprobe=6, rerank=400, cells=S.learned_cellmap(e, 10, 2)
         ),
         floor=(4, 5),
     )
@@ -959,8 +961,13 @@ def llm_ann_ivf_pq_scaled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_lists, nprobe, rerank = S.scaled_pq_budgets(e.count())
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_pq_learned_topk(
-            q, e, k=5, nprobe=nprobe, rerank=rerank, n_lists=n_lists, train_iters=2
+        S.ivf_search(
+            q,
+            e,
+            k=5,
+            nprobe=nprobe,
+            rerank=rerank,
+            cells=S.learned_cellmap(e, n_lists, 2),
         ),
         floor=(4, 5),
     )
@@ -999,8 +1006,13 @@ def llm_ann_ivf_pq_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_lists, nprobe, rerank = S.scaled_pq_budgets(e.count())
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_pq_learned_topk(
-            q, er, k=5, nprobe=nprobe, rerank=rerank, n_lists=n_lists, train_iters=2
+        S.ivf_search(
+            q,
+            er,
+            k=5,
+            nprobe=nprobe,
+            rerank=rerank,
+            cells=S.learned_cellmap(er, n_lists, 2),
         ),
         floor=(4, 5),
     )
@@ -1052,7 +1064,7 @@ def llm_ann_frozen_add_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-resident quantizer artifact), and the ENTIRE corpus — the
     half the quantizer never saw included — joins the index through one
     shuffle-free nearest-center assignment pass
-    (operators/similarity.assign_to_centers + ivf_frozen_add_topk). At
+    (operators/similarity.assign_to_centers cells into ivf_search). At
     100 TB this is what keeps a continuously-growing vector index
     maintainable: ingestion assigns new batches in a narrow Arrow pass;
     no Lloyd's iteration ever re-shuffles the corpus.
@@ -1069,8 +1081,12 @@ def llm_ann_frozen_add_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 20)
     return _ann_recall_report(
         _exact_ground_truth(e),
-        S.ivf_frozen_add_topk(
-            q, e, centers, k=5, nprobe=max(4, math.ceil(0.5 * n_lists))
+        S.ivf_search(
+            q,
+            e,
+            k=5,
+            nprobe=max(4, math.ceil(0.5 * n_lists)),
+            cells=S.assign_to_centers(e, centers),
         ),
         floor=(3, 4),
     )
@@ -1158,8 +1174,8 @@ def llm_frozen_index_drift_trigger(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def llm_ann_frozen_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index lifecycle's DELETE verb under a ROW-EXACT planted-twin
-    oracle (operators/similarity.ivf_frozen_delete_topk — FAISS
-    ``remove_ids`` as one left-anti mask BEFORE the probe): plant a
+    oracle (operators/similarity.mask_tombstones — FAISS ``remove_ids``
+    as one left-anti mask BEFORE the ivf_search probe): plant a
     byte-identical twin of every query vector (negative ids — a-priori
     collision-free at every tier, including the replicated scaled
     fixtures whose ids live at k*10^9 offsets), tombstone the twins with
@@ -1180,8 +1196,9 @@ def llm_ann_frozen_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     n_lists, centers = _frozen_quantizer(e)
     q, corpus, dead_log = _planted_twins(e)
-    return S.ivf_frozen_delete_topk(
-        q, corpus, centers, dead_log, k=5, nprobe=n_lists
+    live = S.mask_tombstones(corpus, dead_log)
+    return S.ivf_search(
+        q, live, k=5, nprobe=n_lists, cells=S.assign_to_centers(live, centers)
     )
 
 
@@ -1325,15 +1342,14 @@ def llm_ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("deleted_ppm").alias("post_deleted_ppm"),
         F.col("rebuild").alias("post_rebuild"),
     )
-    pre_masked = S.ivf_frozen_delete_topk(
-        q, corpus, centers, dead_log, k=5, nprobe=n_lists
+    masked = S.mask_tombstones(corpus, dead_log)
+    pre_masked = S.ivf_search(
+        q, masked, k=5, nprobe=n_lists, cells=S.assign_to_centers(masked, centers)
     )
-    post = S.ivf_frozen_add_topk(q, live, centers2, k=5, nprobe=n_lists)
-    diff = (
-        pre_masked.exceptAll(post)
-        .unionByName(post.exceptAll(pre_masked))
-        .agg(F.count(F.lit(1)).alias("__n_diff"))
+    post = S.ivf_search(
+        q, live, k=5, nprobe=n_lists, cells=S.assign_to_centers(live, centers2)
     )
+    diff = sym_diff_count(pre_masked, post, "__n_diff")
     chk = post.agg(
         F.sum(F.col("neighbor_id") * F.col("rank"))
         .cast("bigint")
@@ -1383,7 +1399,6 @@ def llm_ann_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     any engine), the quantizer is the same bounded driver artifact it
     was at training time, and reloading costs a metadata-scale read +
     one k-row collect — never a retrain, never a corpus re-shuffle."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -1395,13 +1410,7 @@ def llm_ann_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a concurrent session's overwrite must never race this session's
     # load — each process owns its artifact; same-process reruns
     # overwrite their own)
-    resolved = os.path.realpath(sf_dir.rstrip("/"))
-    tag = (
-        os.path.basename(resolved).replace(".", "_")
-        + "_"
-        + hashlib.md5(resolved.encode()).hexdigest()[:8]
-    )
-    path = f"{tempfile.gettempdir()}/sg_ivfidx_{tag}_{os.getpid()}"
+    path = f"{tempfile.gettempdir()}/sg_ivfidx_{path_tag(sf_dir)}_{os.getpid()}"
     S.save_ivf_index(cellmap, centers, path)
     loaded_cells, loaded_centers = S.load_ivf_index(spark, path)
     # Sever the returned plan's lineage from the on-disk artifact
@@ -1416,15 +1425,7 @@ def llm_ann_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"saved {len(centers)}, loaded {len(loaded_centers)}"
         )
     q = e.where(F.col("vec_id") < 20)
-    return S.ivf_topk(
-        q,
-        e.join(
-            loaded_cells.withColumnRenamed("cid", "__ivf_cell"), "vec_id"
-        ),
-        k=5,
-        nprobe=n_lists,
-        list_col="__ivf_cell",
-    )
+    return S.ivf_search(q, e, k=5, nprobe=n_lists, cells=loaded_cells)
 
 
 @query(
@@ -1471,7 +1472,6 @@ def llm_ann_pq_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs a metadata-scale read (k centroids, M codebooks, one d x d
     matrix) plus lazy scans of the id-keyed cell/code maps, never a
     retrain, re-encode, or corpus re-shuffle."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -1482,18 +1482,12 @@ def llm_ann_pq_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     er = S.opq_rotate(e)  # cached rotated frame (same R, same GEMM)
     cellmap = S.learned_cellmap(er, n_lists, 2)
     corpus_mem = er.join(cellmap, "vec_id")
-    centroids = S.ivf_centroids_frame(
-        corpus_mem, list_col="__ivf_cell"
-    ).localCheckpoint(eager=True)
+    centroids = S.ivf_centroids_frame(corpus_mem, list_col="cid").localCheckpoint(
+        eager=True
+    )
     codes = S.pq_encode(er)
 
-    resolved = os.path.realpath(sf_dir.rstrip("/"))
-    tag = (
-        os.path.basename(resolved).replace(".", "_")
-        + "_"
-        + hashlib.md5(resolved.encode()).hexdigest()[:8]
-    )
-    path = f"{tempfile.gettempdir()}/sg_pqidx_{tag}_{os.getpid()}"
+    path = f"{tempfile.gettempdir()}/sg_pqidx_{path_tag(sf_dir)}_{os.getpid()}"
     S.save_pq_index(cellmap, centroids, codes, None, rot, path)
     l_cells, l_cent, l_codes, l_cbs, l_rot = S.load_pq_index(spark, path)
     # sever lineage from the on-disk artifact, then reclaim the dir
@@ -1503,11 +1497,7 @@ def llm_ann_pq_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id-keyed state instead of two, and the loaded-search legs reuse
     # the pre-joined (vec_id, cell, codes) frame instead of re-running
     # the join per execution — the round-12 proof-volume trim.
-    l_state = (
-        l_cells.withColumnRenamed("cid", "__ivf_cell")
-        .join(l_codes, "vec_id")
-        .localCheckpoint(eager=True)
-    )
+    l_state = l_cells.join(l_codes, "vec_id").localCheckpoint(eager=True)
     l_cent = l_cent.localCheckpoint(eager=True)
     shutil.rmtree(path, ignore_errors=True)
     if l_rot is None or len(l_cbs) != S.PQ_SUBSPACES:
@@ -1527,31 +1517,27 @@ def llm_ann_pq_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # report) — persist the ~k·queries-row results so each multi-stage
     # ADC/rerank pipeline evaluates ONCE, not 2-3x inside the one
     # returned plan (the round-13 proof-volume trim)
-    ann_loaded = S.ivf_pq_topk(
+    ann_loaded = S.ivf_search(
         er_loaded.where(F.col("vec_id") < 20),
         corpus_loaded,
         k=5,
         nprobe=nprobe,
         rerank=rerank,
-        list_col="__ivf_cell",
+        list_col="cid",
         codebooks=l_cbs,
         codes_col="codes",
         centroids=l_cent,
     ).persist()
-    ann_mem = S.ivf_pq_topk(
+    ann_mem = S.ivf_search(
         er.where(F.col("vec_id") < 20),
         corpus_mem,
         k=5,
         nprobe=nprobe,
         rerank=rerank,
-        list_col="__ivf_cell",
+        list_col="cid",
         centroids=centroids,
     ).persist()
-    diff = (
-        ann_loaded.exceptAll(ann_mem)
-        .unionByName(ann_mem.exceptAll(ann_loaded))
-        .agg(F.count(F.lit(1)).alias("__n_diff"))
-    )
+    diff = sym_diff_count(ann_loaded, ann_mem, "__n_diff")
     return (
         _ann_recall_report(_exact_ground_truth(e), ann_loaded, floor=(4, 5))
         .crossJoin(F.broadcast(diff))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, path_tag, sym_diff_count
 from .llm import NGRAM_JACCARD_SQL
 from .registry import query
 
@@ -1524,11 +1524,7 @@ def llm_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin = _inc_admit(
         _inc_gated(d, keepers_u, contaminated, _inc_neardup_drops(ver_u))
     ).persist()
-    diff = (
-        incremental.exceptAll(twin)
-        .unionByName(twin.exceptAll(incremental))
-        .agg(F.count(F.lit(1)).alias("__n_diff"))
-    )
+    diff = sym_diff_count(incremental, twin, "__n_diff")
     return (
         incremental.withColumn(
             "__new", (F.col("doc_id") >= INC_SPLIT_ID).cast("bigint")
@@ -1679,7 +1675,6 @@ def llm_corpus_build_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the handoff a training job actually consumes:
     partition-pruned parquet shards, a bounded manifest as the commit
     record, and an integrity check that needs no out-of-band state."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -1687,15 +1682,11 @@ def llm_corpus_build_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import shardsink as SS
 
     admitted, n_nd_dropped = _e2e_admitted(spark, sf_dir)
-    resolved = os.path.realpath(sf_dir.rstrip("/"))
-    tag = (
-        os.path.basename(resolved).replace(".", "_")
-        + "_"
-        + hashlib.md5(resolved.encode()).hexdigest()[:8]
-    )
     # pid-keyed like sg_pqidx/sg_ivfidx: two concurrent sessions on the
     # same fixture must not race on write/verify/read of one directory.
-    out_dir = f"{tempfile.gettempdir()}/sg_corpus_shards_{tag}_{os.getpid()}"
+    out_dir = (
+        f"{tempfile.gettempdir()}/sg_corpus_shards_{path_tag(sf_dir)}_{os.getpid()}"
+    )
     SS.write_training_shards(
         admitted, out_dir, n_shards=E2E_SHARDS, id_col="doc_id"
     )

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, sym_diff_count
 from ..session import conf_scope
 from .registry import query
 
@@ -1395,7 +1395,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers, deterministic ids), so dropDuplicates over (vec_id, cid) /
     (vec_id) collapses at-least-once re-delivery. Tombstones are
     ABSOLUTE until compaction (a re-added tombstoned id stays masked —
-    the frozen-index tombstone-tier semantics, ivf_frozen_delete_topk's
+    the frozen-index tombstone-tier semantics, similarity.mask_tombstones'
     contract), which is what makes the final state order-free and the
     oracle a-priori.
 
@@ -1403,7 +1403,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     add-log − tombstones) must equal the BATCH-built index over the
     same op table cell-for-cell (full symmetric difference, in-plan),
     and a partial-probe search through the maintained index must equal
-    ivf_frozen_delete_topk over the batch-derived corpus row-for-row —
+    ivf_search over the tombstone-masked batch-derived corpus row-for-row —
     same centers, same cells, same live set, so equality is a theorem
     even at partial probe. The load report (deleted_ppm over MATCHED
     tombstones — stream deletes targeting never-indexed odd ids are
@@ -1475,8 +1475,9 @@ def _ann_maintenance_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = e.where(F.col("vec_id") < 20)
     nprobe = max(4, n_lists // 2)
-    want = S.ivf_frozen_delete_topk(
-        q, indexed_corpus, centers, dels_b, k=5, nprobe=nprobe
+    live_b = S.mask_tombstones(indexed_corpus, dels_b)
+    want = S.ivf_search(
+        q, live_b, k=5, nprobe=nprobe, cells=S.assign_to_centers(live_b, centers)
     ).persist()
 
     thread, errs = _overlap_with_stream(
@@ -1518,25 +1519,11 @@ def _ann_maintenance_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(tomb, "vec_id", "anti")
         .persist()
     )
-    cells_diff = (
-        maintained.exceptAll(twin)
-        .unionByName(twin.exceptAll(maintained))
-        .agg(F.count(F.lit(1)).alias("__cells_diff"))
-    )
+    cells_diff = sym_diff_count(maintained, twin, "__cells_diff")
 
     # partial-probe search equality: maintained index vs batch DELETE verb
-    got = S.ivf_topk(
-        q,
-        e.join(maintained.withColumnRenamed("cid", "__ivf_cell"), "vec_id"),
-        k=5,
-        nprobe=nprobe,
-        list_col="__ivf_cell",
-    ).persist()
-    search_diff = (
-        got.exceptAll(want)
-        .unionByName(want.exceptAll(got))
-        .agg(F.count(F.lit(1)).alias("__search_diff"))
-    )
+    got = S.ivf_search(q, e, k=5, nprobe=nprobe, cells=maintained).persist()
+    search_diff = sym_diff_count(got, want, "__search_diff")
 
     rep = S.tombstone_load_report(indexed_corpus, tomb).select(
         F.col("n_total").alias("n_indexed"),
@@ -2241,11 +2228,7 @@ def _corpus_admission_body(
         (F.count_distinct("batch_id") >= 2).cast("int").alias("multi_batch")
     )
 
-    diff = (
-        streamed.exceptAll(twin)
-        .unionByName(twin.exceptAll(streamed))
-        .agg(F.count(F.lit(1)).alias("__n_diff"))
-    )
+    diff = sym_diff_count(streamed, twin, "__n_diff")
     report = (
         streamed.groupBy("source")
         .agg(
@@ -2509,13 +2492,7 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = e.where(F.col("vec_id") < 20)
     nprobe = max(4, n_lists // 2)
-    want = S.ivf_topk(
-        q,
-        e.join(twin_cells.withColumnRenamed("cid", "__ivf_cell"), "vec_id"),
-        k=5,
-        nprobe=nprobe,
-        list_col="__ivf_cell",
-    ).persist()
+    want = S.ivf_search(q, e, k=5, nprobe=nprobe, cells=twin_cells).persist()
 
     thread, errs = _overlap_with_stream(
         spark, (twin_cells, want),
@@ -2566,25 +2543,11 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    cells_diff = (
-        live_s.exceptAll(twin_cells)
-        .unionByName(twin_cells.exceptAll(live_s))
-        .agg(F.count(F.lit(1)).alias("__cells_diff"))
-    )
+    cells_diff = sym_diff_count(live_s, twin_cells, "__cells_diff")
     # each search feeds both exceptAll directions — persist the k·queries
     # result rows so the probe+rank pipelines evaluate once, not twice
-    got = S.ivf_topk(
-        q,
-        e.join(live_s.withColumnRenamed("cid", "__ivf_cell"), "vec_id"),
-        k=5,
-        nprobe=nprobe,
-        list_col="__ivf_cell",
-    ).persist()
-    search_diff = (
-        got.exceptAll(want)
-        .unionByName(want.exceptAll(got))
-        .agg(F.count(F.lit(1)).alias("__search_diff"))
-    )
+    got = S.ivf_search(q, e, k=5, nprobe=nprobe, cells=live_s).persist()
+    search_diff = sym_diff_count(got, want, "__search_diff")
     counts = adds_b.agg(F.count(F.lit(1)).alias("n_adds")).crossJoin(
         F.broadcast(dels_b.agg(F.count(F.lit(1)).alias("n_deletes")))
     )

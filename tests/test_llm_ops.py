@@ -81,12 +81,12 @@ def test_ivf_exhaustive_probe_equals_brute_force(spark):
     e = load_table(spark, SMOKE_SF, "embeddings")
     q = e.where(F.col("vec_id") < 20)
     bf = S.cosine_topk(q, e, k=3).toPandas()
-    ivf_all = S.ivf_topk(q, e, k=3, nprobe=10).toPandas()
+    ivf_all = S.ivf_search(q, e, k=3, nprobe=10).toPandas()
     key = ["query_id", "neighbor_id", "rank", "sim"]
     assert sorted(map(tuple, ivf_all[key].values.tolist())) == sorted(
         map(tuple, bf[key].values.tolist())
     )
-    partial = S.ivf_topk(q, e, k=3, nprobe=3).toPandas()
+    partial = S.ivf_search(q, e, k=3, nprobe=3).toPandas()
     bf_sims = {
         (r.query_id, r.neighbor_id): r.sim
         for r in S.cosine_topk(q, e, k=500).toPandas().itertuples()
@@ -164,8 +164,13 @@ def test_scaled_pq_recall_holds_at_sf01(spark):
     q = e.where(F.col("vec_id") < 20)
     n_lists, nprobe, rerank = S.scaled_pq_budgets(e.count())
     bf = S.cosine_topk(q, e, k=5).toPandas()
-    ap = S.ivf_pq_learned_topk(
-        q, e, k=5, nprobe=nprobe, rerank=rerank, n_lists=n_lists, train_iters=2
+    ap = S.ivf_search(
+        q,
+        e,
+        k=5,
+        nprobe=nprobe,
+        rerank=rerank,
+        cells=S.learned_cellmap(e, n_lists, 2),
     ).toPandas()
     bf_set = set(zip(bf.query_id, bf.neighbor_id))
     ap_set = set(zip(ap.query_id, ap.neighbor_id))
@@ -174,7 +179,7 @@ def test_scaled_pq_recall_holds_at_sf01(spark):
 
 
 def test_assign_to_centers_frozen_quantizer_contract(spark):
-    """The frozen-assignment step behind ivf_frozen_add_topk: every
+    """The frozen-assignment step behind a frozen index's cells: every
     vector lands in exactly one cell with a cid the center list defines;
     the call is deterministic; and a vector that IS a trained center is
     assigned that center's cell with __d2 == 0 — the anchor that catches
@@ -219,8 +224,12 @@ def test_frozen_add_recall_holds_at_sf01(spark):
     )
     q = e.where(F.col("vec_id") < 20)
     bf = S.cosine_topk(q, e, k=5).toPandas()
-    ap = S.ivf_frozen_add_topk(
-        q, e, centers, k=5, nprobe=max(4, math.ceil(0.5 * n_lists))
+    ap = S.ivf_search(
+        q,
+        e,
+        k=5,
+        nprobe=max(4, math.ceil(0.5 * n_lists)),
+        cells=S.assign_to_centers(e, centers),
     ).toPandas()
     bf_set = set(zip(bf.query_id, bf.neighbor_id))
     recall = len(bf_set & set(zip(ap.query_id, ap.neighbor_id))) / len(bf_set)
@@ -763,8 +772,8 @@ def test_ivf_pq_generous_rerank_equals_ivf(spark):
     code-assignment, table-lookup, and re-rank plumbing end to end."""
     e = load_table(spark, SMOKE_SF, "embeddings")
     q = e.where(F.col("vec_id") < 10)
-    ivf = S.ivf_topk(q, e, k=3, nprobe=3).toPandas()
-    pq = S.ivf_pq_topk(q, e, k=3, nprobe=3, rerank=100000).toPandas()
+    ivf = S.ivf_search(q, e, k=3, nprobe=3, rerank=None).toPandas()
+    pq = S.ivf_search(q, e, k=3, nprobe=3, rerank=100000).toPandas()
     key = ["query_id", "neighbor_id", "rank", "sim"]
     assert sorted(map(tuple, pq[key].values.tolist())) == sorted(
         map(tuple, ivf[key].values.tolist())
@@ -1038,7 +1047,7 @@ def test_exact_substring_dedup_mark_semantics(spark):
 
 
 def test_frozen_delete_masks_tombstones_and_recloses_ranks(spark):
-    """The index lifecycle's DELETE verb (ivf_frozen_delete_topk): plant
+    """The index lifecycle's DELETE verb (mask_tombstones): plant
     an identical twin for every query vector (guaranteed rank-1 by
     cosine 1.0), tombstone the twins, and the deleted ids must (a) never
     appear in any result and (b) with exhaustive probing the survivors
@@ -1056,8 +1065,9 @@ def test_frozen_delete_masks_tombstones_and_recloses_ranks(spark):
     q = e.where(F.col("vec_id") < 20)
     dead = twins.select("vec_id")
 
-    got = S.ivf_frozen_delete_topk(
-        q, corpus, centers, dead, k=3, nprobe=n_lists
+    live = S.mask_tombstones(corpus, dead)
+    got = S.ivf_search(
+        q, live, k=3, nprobe=n_lists, cells=S.assign_to_centers(live, centers)
     ).toPandas()
     assert not (got.neighbor_id >= OFFSET).any(), "tombstoned id returned"
     live_bf = S.cosine_topk(q, e, k=3).toPandas()
@@ -1066,8 +1076,8 @@ def test_frozen_delete_masks_tombstones_and_recloses_ranks(spark):
         map(tuple, live_bf[key].values.tolist())
     )
     # sanity: without the tombstones the twins DO win rank 1
-    with_dead = S.ivf_frozen_add_topk(
-        q, corpus, centers, k=1, nprobe=n_lists
+    with_dead = S.ivf_search(
+        q, corpus, k=1, nprobe=n_lists, cells=S.assign_to_centers(corpus, centers)
     ).toPandas()
     assert (with_dead.neighbor_id >= OFFSET).all()
 
@@ -1109,11 +1119,16 @@ def test_ivf_compact_reassign_keeps_structure_and_results(spark):
     }
     assert post_cells == pre_cells  # index structure over the live set
 
-    masked = S.ivf_frozen_delete_topk(
-        q, corpus, centers, dead, k=3, nprobe=n_lists
+    masked_corpus = S.mask_tombstones(corpus, dead)
+    masked = S.ivf_search(
+        q,
+        masked_corpus,
+        k=3,
+        nprobe=n_lists,
+        cells=S.assign_to_centers(masked_corpus, centers),
     ).toPandas()
-    compacted = S.ivf_frozen_add_topk(
-        q, live, centers2, k=3, nprobe=n_lists
+    compacted = S.ivf_search(
+        q, live, k=3, nprobe=n_lists, cells=S.assign_to_centers(live, centers2)
     ).toPandas()
     key = ["query_id", "neighbor_id", "rank", "sim"]
     assert sorted(map(tuple, masked[key].values.tolist())) == sorted(
@@ -1146,7 +1161,9 @@ def test_ivf_compact_retrain_preserves_search_results(spark):
     n_lists2 = len(centers2)
     assert n_lists2 == max(5, math.ceil(math.sqrt(e.count())))
     q = e.where(F.col("vec_id") < 20)
-    got = S.ivf_frozen_add_topk(q, live, centers2, k=3, nprobe=n_lists2).toPandas()
+    got = S.ivf_search(
+        q, live, k=3, nprobe=n_lists2, cells=S.assign_to_centers(live, centers2)
+    ).toPandas()
     bf = S.cosine_topk(q, e, k=3).toPandas()
     key = ["query_id", "neighbor_id", "rank", "sim"]
     assert sorted(map(tuple, got[key].values.tolist())) == sorted(
@@ -1177,20 +1194,8 @@ def test_ivf_index_save_load_roundtrip_bit_exact(spark, tmp_path):
     got = sorted((r.vec_id, r.cid) for r in loaded_cells.collect())
     assert got == want
     q = e.where(F.col("vec_id") < 20)
-    via_loaded = S.ivf_topk(
-        q,
-        e.join(loaded_cells.withColumnRenamed("cid", "__ivf_cell"), "vec_id"),
-        k=3,
-        nprobe=3,
-        list_col="__ivf_cell",
-    ).toPandas()
-    via_mem = S.ivf_topk(
-        q,
-        e.join(cellmap.withColumnRenamed("cid", "__ivf_cell"), "vec_id"),
-        k=3,
-        nprobe=3,
-        list_col="__ivf_cell",
-    ).toPandas()
+    via_loaded = S.ivf_search(q, e, k=3, nprobe=3, cells=loaded_cells).toPandas()
+    via_mem = S.ivf_search(q, e, k=3, nprobe=3, cells=cellmap).toPandas()
     key = ["query_id", "neighbor_id", "rank", "sim"]
     assert sorted(map(tuple, via_loaded[key].values.tolist())) == sorted(
         map(tuple, via_mem[key].values.tolist())
@@ -1283,9 +1288,9 @@ def test_pq_index_roundtrip_is_bit_exact(spark, tmp_path):
     er = S.opq_rotate(e)
     cellmap = S.learned_cellmap(er, n_lists, 2)
     corpus_mem = er.join(cellmap, "vec_id")
-    centroids = S.ivf_centroids_frame(
-        corpus_mem, list_col="__ivf_cell"
-    ).localCheckpoint(eager=True)
+    centroids = S.ivf_centroids_frame(corpus_mem, list_col="cid").localCheckpoint(
+        eager=True
+    )
     codes = S.pq_encode(er)
     path = str(tmp_path / "pqidx")
     S.save_pq_index(cellmap, centroids, codes, None, rot, path)
@@ -1300,7 +1305,7 @@ def test_pq_index_roundtrip_is_bit_exact(spark, tmp_path):
         (r.ivf_list, tuple(r.centroid)) for r in l_cent.collect()
     )
     assert got_cent == want_cent
-    assert sorted((r["vec_id"], r["__ivf_cell"]) for r in cellmap.collect()) == sorted(
+    assert sorted((r.vec_id, r.cid) for r in cellmap.collect()) == sorted(
         (r.vec_id, r.cid) for r in l_cells.collect()
     )
     assert sorted((r.vec_id, tuple(r.codes)) for r in codes.collect()) == sorted(
@@ -1308,26 +1313,24 @@ def test_pq_index_roundtrip_is_bit_exact(spark, tmp_path):
     )
 
     er_loaded = S.opq_apply(e, l_rot)
-    via_loaded = S.ivf_pq_topk(
+    via_loaded = S.ivf_search(
         er_loaded.where(F.col("vec_id") < 20),
-        er_loaded.join(
-            l_cells.withColumnRenamed("cid", "__ivf_cell"), "vec_id"
-        ).join(l_codes, "vec_id"),
+        er_loaded.join(l_codes, "vec_id"),
         k=3,
         nprobe=nprobe,
         rerank=rerank,
-        list_col="__ivf_cell",
+        cells=l_cells,
         codebooks=l_cbs,
         codes_col="codes",
         centroids=l_cent,
     ).toPandas()
-    via_mem = S.ivf_pq_topk(
+    via_mem = S.ivf_search(
         er.where(F.col("vec_id") < 20),
         corpus_mem,
         k=3,
         nprobe=nprobe,
         rerank=rerank,
-        list_col="__ivf_cell",
+        list_col="cid",
         centroids=centroids,
     ).toPandas()
     key = ["query_id", "neighbor_id", "rank", "sim"]
@@ -1341,9 +1344,7 @@ def test_save_pq_index_without_rotation_loads_none(spark, tmp_path):
     indexes of the unrotated PQ family), not crash or fabricate an R."""
     e = load_table(spark, SMOKE_SF, "embeddings")
     cellmap = S.learned_cellmap(e, 5, 1)
-    centroids = S.ivf_centroids_frame(
-        e.join(cellmap, "vec_id"), list_col="__ivf_cell"
-    )
+    centroids = S.ivf_centroids_frame(e.join(cellmap, "vec_id"), list_col="cid")
     path = str(tmp_path / "pqidx_norot")
     S.save_pq_index(cellmap, centroids, S.pq_encode(e), None, None, path)
     _, _, _, l_cbs, l_rot = S.load_pq_index(spark, path)

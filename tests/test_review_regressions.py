@@ -1228,6 +1228,33 @@ def test_session_artifacts_and_conf_scopes_live_only_in_session_module():
     assert offenders == []
 
 
+def test_ivf_cell_column_and_path_tag_live_in_one_module():
+    """One IVF cell-map shape and one path tag: the private IVF cell column
+    (which callers had to rename ``cid`` into) may appear only in
+    operators/similarity.py, and the resolve + md5 directory-tag recipe
+    only in ``catalog.path_tag``."""
+    import re
+    from pathlib import Path
+
+    import custom_python_etl_data_connector_rohitharumugams_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    package = {p: p.read_text() for p in sorted(root.rglob("*.py"))}
+    tests = {p: p.read_text() for p in sorted(Path(__file__).parent.rglob("*.py"))}
+    cell = "__" + "ivf_cell"  # split so this file does not match itself
+    resolve = re.compile(r"realpath\(|\.resolve\(\)")
+    offenders = [
+        f"{p}: {cell}"
+        for p, text in {**package, **tests}.items()
+        if p != root / "operators" / "similarity.py" and cell in text
+    ] + [
+        f"{p}: md5 of a resolved path"
+        for p, text in package.items()
+        if p != root / "catalog.py" and "hashlib.md5(" in text and resolve.search(text)
+    ]
+    assert offenders == []
+
+
 @pytest.mark.parametrize(
     "phys_gb, heap",
     [(16, "8192m"), (256, "65536m")],
