@@ -70,31 +70,86 @@ _STREAM_STATE_CONF: dict[str, str] = {
 }
 
 
-def _overlap_with_stream(spark: SparkSession, frames, desc: str):
-    """Materialize stream-INDEPENDENT persisted frames on a driver thread
-    while a replay loop runs (guide §2.6: overlap independent jobs — the
-    micro-batch loops are latency-bound and leave the executor mostly
-    idle between their small stages, so the proof legs' corpus-scale
-    work back-fills that idle capacity for free). Returns ``(thread,
-    errs)``; join the thread after the stream and re-raise ``errs[0]``
-    if present. Correctness is untouched: the frames read only static
-    fixture tables, and persist() makes the thread's materialization
-    the one evaluation every post-stream consumer reuses."""
+def _sf_tmp(tag: str, sf_dir: str, kind: str) -> str:
+    """``<tmp>/sg_<tag>_<sf>_<kind>``: the one naming rule for the
+    streaming queries' per-scale-factor scratch dirs (replay slices,
+    logs, landing and checkpoint dirs)."""
+    import tempfile
+
+    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    return f"{tempfile.gettempdir()}/sg_{tag}_{sf}_{kind}"
+
+
+def _run_stream(
+    spark: SparkSession,
+    writer,
+    tag: str,
+    *,
+    checkpoint: str | None = None,
+    overlap: tuple[DataFrame, ...] = (),
+):
+    """Run ``writer`` — a ``DataStreamWriter`` the caller has given its
+    sink, output mode, query name and path — as one ``availableNow``
+    streaming query and wait for it. The only place the package starts a
+    streaming query:
+
+    - the query starts and is awaited under ``_STREAM_STATE_CONF``
+      (foreachBatch bodies plan their state reads against the session
+      conf while the loop runs, so the scope covers the wait too);
+    - a query still running after 300 s is stopped and raises, so no
+      caller can start a second run against a live checkpoint;
+    - ``checkpoint=None`` makes a one-shot checkpoint and removes it after
+      termination; a given ``checkpoint`` is kept, because resuming from
+      it is the caller's point;
+    - ``overlap`` names persisted, stream-INDEPENDENT frames (they read
+      only static fixture tables) that one driver thread materializes
+      while the loop runs. The micro-batch loops are latency-bound and
+      leave the executors mostly idle between their small stages, so the
+      proof legs' corpus-scale work back-fills that capacity (guide §2.6),
+      and persist() makes the thread's evaluation the one every
+      post-stream consumer reuses. The thread is joined after the run and
+      its first error re-raised; none starts when ``overlap`` is empty.
+
+    Returns the terminated query, kept for progress-ledger readers."""
+    import shutil
+    import tempfile
+
     from pyspark import InheritableThread
 
     errs: list[BaseException] = []
 
     def _fill() -> None:
         try:
-            spark.sparkContext.setJobDescription(desc)
-            for f in frames:
+            spark.sparkContext.setJobDescription(
+                f"{tag}: stream-independent frames (overlapped)"
+            )
+            for f in overlap:
                 f.count()
         except BaseException as exc:  # re-raised on the main thread
             errs.append(exc)
 
-    t = InheritableThread(target=_fill)
-    t.start()
-    return t, errs
+    thread = InheritableThread(target=_fill) if overlap else None
+    if thread is not None:
+        thread.start()
+    cp = checkpoint or tempfile.mkdtemp(prefix=f"sg_{tag}_cp_")
+    try:
+        with conf_scope(spark, _STREAM_STATE_CONF):
+            q = (
+                writer.option("checkpointLocation", cp)
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(300):
+                q.stop()
+                raise RuntimeError(f"{tag} stream did not finish in 300 s")
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(cp, ignore_errors=True)
+        if thread is not None:
+            thread.join()
+    if errs:
+        raise errs[0]
+    return q
 
 
 def _run_replay_foreachbatch(
@@ -103,30 +158,29 @@ def _run_replay_foreachbatch(
     tag: str,
     sink,
     transform=None,
-    timeout: int = 300,
     source: str = "events",
+    overlap: tuple[DataFrame, ...] = (),
 ):
     """ONE copy of the replayed-foreachBatch scaffold shared by the
     streaming-maintenance queries (CMS grids, observed metrics, histogram
-    quantiles): time-sliced replay source (maxFilesPerTrigger=1 => real
-    micro-batch boundaries), deterministic per-(tag, sf, PID) parquet log
-    dir CLEARED at invocation start (the log must outlive the call for
-    the returned lazy plans, so a mkdtemp per run would leak one dir per
-    bench/driver execution — bounded to one per tag+sf+process instead;
-    the pid key is the sg_pqidx concurrency discipline: a driver run and
-    a verify session overlapping on the same fixture must not rmtree
-    each other's live state mid-stream), one-shot checkpoint removed
-    after termination, and the 300 s hang guard.
+    quantiles, the ANN index loops, corpus admission): time-sliced replay
+    source (maxFilesPerTrigger=1 => real micro-batch boundaries) run
+    through :func:`_run_stream`, with a deterministic per-(tag, sf, PID)
+    parquet log dir CLEARED at invocation start (the log must outlive the
+    call for the returned lazy plans, so a mkdtemp per run would leak one
+    dir per bench/driver execution — bounded to one per tag+sf+process
+    instead; the pid key is the sg_pqidx concurrency discipline: a driver
+    run and a verify session overlapping on the same fixture must not
+    rmtree each other's live state mid-stream).
     ``transform`` (optional) maps the streaming source frame before the
     sink — e.g. observe() instrumentation; ``sink`` is a FACTORY
     ``sink(log_dir) -> foreachBatch body`` so the batch writer is built
     against the helper-owned log path. ``source`` selects the replayed
     table: ``"events"`` (time-sliced) or ``"documents"`` (doc_id-sliced
-    arrival order — the corpus-admission loop). Returns ``(log_dir,
-    query)`` — the query object is terminated, kept for progress-ledger
-    readers."""
+    arrival order — the corpus-admission loop). ``overlap`` is passed to
+    :func:`_run_stream`. Returns ``(log_dir, query)`` — the query object
+    is terminated, kept for progress-ledger readers."""
     import shutil
-    import tempfile
 
     from ..streaming.replay import (
         documents_stream,
@@ -135,34 +189,20 @@ def _run_replay_foreachbatch(
         split_events_for_replay,
     )
 
-    safe = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     splitter, stream_fn = {
         "events": (split_events_for_replay, events_stream),
         "documents": (split_documents_for_replay, documents_stream),
     }[source]
-    replay_dir = splitter(
-        spark, sf_dir, f"{tempfile.gettempdir()}/sg_{tag}_{safe}_replay"
-    )
-    log_dir = f"{tempfile.gettempdir()}/sg_{tag}_log_{safe}_{os.getpid()}"
+    replay_dir = splitter(spark, sf_dir, _sf_tmp(tag, sf_dir, "replay"))
+    log_dir = _sf_tmp(tag, sf_dir, f"log_{os.getpid()}")
     shutil.rmtree(log_dir, ignore_errors=True)
-    cp = tempfile.mkdtemp(prefix=f"sg_{tag}_cp_")
 
     sdf = stream_fn(spark, replay_dir, max_files_per_trigger=1)
     if transform is not None:
         sdf = transform(sdf)
-    with conf_scope(spark, _STREAM_STATE_CONF):
-        q = (
-            sdf.writeStream.foreachBatch(sink(log_dir))
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(timeout):
-                q.stop()
-                raise RuntimeError(f"{tag} replay did not finish in {timeout} s")
-        finally:
-            shutil.rmtree(cp, ignore_errors=True)  # one-shot replay: no resume
+    q = _run_stream(
+        spark, sdf.writeStream.foreachBatch(sink(log_dir)), tag, overlap=overlap
+    )
     return log_dir, q
 
 
@@ -529,15 +569,9 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch engine reproduces (a post-hoc ROUND(SUM(double)) would inherit
     the half-cent drift this repo's EWMA fix documents).
     """
-    import tempfile
-
     from ..streaming.replay import events_stream, split_events_with_late
 
-    replay_dir = split_events_with_late(
-        spark,
-        sf_dir,
-        f"{tempfile.gettempdir()}/sg_wm_{os.path.basename(sf_dir.rstrip('/'))}_replay",
-    )
+    replay_dir = split_events_with_late(spark, sf_dir, _sf_tmp("wm", sf_dir, "replay"))
     sdf = events_stream(spark, replay_dir, max_files_per_trigger=1)
     agg = _watermarked_tumbling_agg(sdf)
     # deterministic sink name per scale factor, previous run's table
@@ -545,24 +579,11 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memory-sink table per invocation for the session's lifetime
     name = f"wm_late_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
     spark.catalog.dropTempView(name)
-    cp = tempfile.mkdtemp(prefix="sg_wm_cp_")
-    with conf_scope(spark, _STREAM_STATE_CONF):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError("watermark replay query did not finish in 300 s")
-        finally:
-            import shutil
-
-            shutil.rmtree(cp, ignore_errors=True)  # one-shot replay: no resume
+    _run_stream(
+        spark,
+        agg.writeStream.format("memory").queryName(name).outputMode("append"),
+        "wm",
+    )
     return spark.table(name)
 
 
@@ -600,17 +621,12 @@ def _run_replay_to_log(
                 .parquet(log_dir)
             )
 
-    with conf_scope(spark, _STREAM_STATE_CONF):
-        q = (
-            agg.writeStream.foreachBatch(_sink)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("replay pass did not finish in 300 s")
+    _run_stream(
+        spark,
+        agg.writeStream.foreachBatch(_sink).outputMode("append"),
+        "ckptrec",
+        checkpoint=checkpoint,
+    )
 
 
 def _ckptrec_paths(sf_dir: str) -> tuple[str, str, str]:
@@ -622,15 +638,7 @@ def _ckptrec_paths(sf_dir: str) -> tuple[str, str, str]:
     isolation would only add cleanup debt. Two CONCURRENT suites on one
     machine would race on these dirs (and on the shared replay build's
     marker check) — run concurrent suites under distinct TMPDIRs."""
-    import tempfile
-
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    t = tempfile.gettempdir()
-    return (
-        f"{t}/sg_ckptrec_{sf}_stage_replay",
-        f"{t}/sg_ckptrec_{sf}_cp",
-        f"{t}/sg_ckptrec_{sf}_log",
-    )
+    return tuple(_sf_tmp("ckptrec", sf_dir, k) for k in ("stage_replay", "cp", "log"))
 
 
 @query(
@@ -677,17 +685,12 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     those emissions and that no window is ever emitted twice).
     """
     import shutil
-    import tempfile
     import time as _time
 
     from ..streaming.replay import split_events_with_late
 
     # reuse the watermark query's slice build (marker-validated, shared)
-    built = split_events_with_late(
-        spark,
-        sf_dir,
-        f"{tempfile.gettempdir()}/sg_wm_{os.path.basename(sf_dir.rstrip('/'))}_replay",
-    )
+    built = split_events_with_late(spark, sf_dir, _sf_tmp("wm", sf_dir, "replay"))
     stage, cp, log_dir = _ckptrec_paths(sf_dir)
     for d in (stage, cp, log_dir):
         shutil.rmtree(d, ignore_errors=True)
@@ -763,8 +766,6 @@ def stream_python_source_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     long-lived queries rather than one-shot availableNow runs.
     """
     import shutil
-    import tempfile
-    from pathlib import Path
 
     from ..sources.fakeapi import (
         DEMO_TOKEN,
@@ -776,7 +777,7 @@ def stream_python_source_incremental(spark: SparkSession, sf_dir: str) -> DataFr
 
     os.environ[DEMO_TOKEN_ENV] = DEMO_TOKEN
     register_sources(spark)
-    base = f"{tempfile.gettempdir()}/sg_pystream_{Path(sf_dir.rstrip('/')).name}"
+    base = _sf_tmp("pystream", sf_dir, "run")
     out, ck = f"{base}/out", f"{base}/ck"
     shutil.rmtree(base, ignore_errors=True)
     ddl = "id bigint, name string, value double, updated_at string"
@@ -798,19 +799,12 @@ def stream_python_source_incremental(spark: SparkSession, sf_dir: str) -> DataFr
             .load()
             .withColumn("leg", F.lit(leg))
         )
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        _run_stream(
+            spark,
+            sdf.writeStream.format("parquet").option("path", out),
+            f"pystream_{leg}",
+            checkpoint=ck,
         )
-        # unchecked timeout would let leg2 start against the same
-        # checkpoint while leg1 still runs (same guard as the replay
-        # queries above)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(f"python-source stream {leg} did not finish in 300 s")
     back = spark.read.schema(f"{ddl}, leg string").parquet(out)
     return back.agg(
         F.count(F.lit(1)).cast("bigint").alias("total_rows"),
@@ -855,7 +849,7 @@ def stream_python_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
     manifest), and the count/cents columns are then the proof the reader
     ignored it — a directory-globbing reader would inflate them and
     redden the hash."""
-    import tempfile
+    import shutil
 
     from ..sources.pysink import (
         LandingDataSource,
@@ -866,29 +860,17 @@ def stream_python_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
 
     spark.dataSource.register(LandingDataSource)
     replay_dir = split_events_for_replay(
-        spark,
-        sf_dir,
-        f"{tempfile.gettempdir()}/sg_pysink_{os.path.basename(sf_dir.rstrip('/'))}_replay",
-        n_slices=2,
+        spark, sf_dir, _sf_tmp("pysink", sf_dir, "replay"), n_slices=2
     )
-    land = tempfile.mkdtemp(prefix="sg_pysink_land_")
-    cp = tempfile.mkdtemp(prefix="sg_pysink_cp_")
+    # one landing dir per (sf, process), cleared at start — the
+    # returned frame reads it lazily, so it must outlive the call (the
+    # replay scaffold's log-dir discipline)
+    land = _sf_tmp("pysink", sf_dir, f"land_{os.getpid()}")
+    shutil.rmtree(land, ignore_errors=True)
     sdf = events_stream(spark, replay_dir, max_files_per_trigger=1).select(
         "event_id", "user_id", "event_type", "value"
     )
-    q = (
-        sdf.writeStream.format("landing")
-        .option("path", land)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("python-sink replay did not finish in 300 s")
-    import shutil
-
-    shutil.rmtree(cp, ignore_errors=True)  # one-shot replay: no resume
+    _run_stream(spark, sdf.writeStream.format("landing").option("path", land), "pysink")
     manifests = landed_manifests(land)
     manifested = {f for m in manifests for f in m["files"]}
     # plant an orphan data file (a "failed task attempt" the driver never
@@ -1307,49 +1289,88 @@ STREAM_ANN_ADD_STRIDE = 23
 STREAM_ANN_DEL_STRIDE = 83
 
 
-def _ann_op_ids(
-    df: DataFrame,
-    e: DataFrame,
-    etype: str,
-    stride: int,
-    parity: int | None = None,
-) -> DataFrame:
-    """ONE definition of how an event stream becomes index-op vector ids
-    (shared by the maintenance and compaction queries — their oracles
-    embed the same rule): filter by event type + id stride, key to
-    event_id % STREAM_ANN_MOD, semi-join the embeddings table, optionally
-    restricted to one id parity (the compaction query's disjoint
-    add/delete targeting)."""
-    tgt = e if parity is None else e.where(F.col("vec_id") % 2 == parity)
-    return (
-        df.where(
-            (F.col("event_type") == etype) & (F.col("event_id") % stride == 0)
+class _AnnOps:
+    """The index-op stream both ANN streaming queries replay over one
+    frozen index, and its batch twin. Every event targets vector
+    ``event_id % STREAM_ANN_MOD``; sparse ``signup`` events ADD it (one
+    frozen-center assignment, ingestion never retrains), sparse
+    ``purchase`` events DELETE it (a tombstone, deletion never moves a
+    vector). ``disjoint`` restricts adds to odd (non-base) ids and deletes
+    to even (base) ids. The oracles state the same rule in
+    :func:`_ann_oracle_ctes`."""
+
+    def __init__(
+        self, spark: SparkSession, sf_dir: str, del_stride: int, disjoint: bool
+    ):
+        from .llm import _frozen_quantizer
+
+        self.e = e = load_table(spark, sf_dir, "embeddings")
+        self.base = e.where(F.col("vec_id") % 2 == 0)
+        n_lists, self.centers = _frozen_quantizer(e)
+        self._rule = {
+            "signup": (STREAM_ANN_ADD_STRIDE, 1 if disjoint else None),
+            "purchase": (del_stride, 0 if disjoint else None),
+        }
+        # the batch twin's op table: the same rule over the whole events
+        # table — stream-independent (events + embeddings only)
+        ev = load_table(spark, sf_dir, "events")
+        self.adds_b = self.ids(ev, "signup")
+        self.dels_b = self.ids(ev, "purchase").persist()
+        indexed = self.base.select("vec_id").unionByName(self.adds_b).distinct()
+        self.indexed_corpus = e.join(indexed, "vec_id", "semi").persist()
+        self.counts = self.adds_b.agg(F.count(F.lit(1)).alias("n_adds")).crossJoin(
+            F.broadcast(self.dels_b.agg(F.count(F.lit(1)).alias("n_deletes")))
         )
-        .select((F.col("event_id") % STREAM_ANN_MOD).alias("vec_id"))
-        .distinct()
-        .join(tgt.select("vec_id"), "vec_id", "semi")
+        self.q = e.where(F.col("vec_id") < 20)
+        self.nprobe = max(4, n_lists // 2)
+
+    def ids(self, df: DataFrame, etype: str) -> DataFrame:
+        """Distinct target vector ids of ``df``'s ``etype`` events."""
+        stride, parity = self._rule[etype]
+        tgt = self.e if parity is None else self.e.where(F.col("vec_id") % 2 == parity)
+        return (
+            df.where((F.col("event_type") == etype) & (F.col("event_id") % stride == 0))
+            .select((F.col("event_id") % STREAM_ANN_MOD).alias("vec_id"))
+            .distinct()
+            .join(tgt.select("vec_id"), "vec_id", "semi")
+        )
+
+    def write(self, batch_df: DataFrame, batch_id: int, path: str) -> None:
+        """Append one micro-batch's op rows to the log at ``path``:
+        ``add`` rows carry their frozen-center cell, ``del`` rows cid -1."""
+        bl = F.lit(batch_id).cast("long").alias("batch_id")
+        adds = self.ids(batch_df, "signup").join(self.e, "vec_id")
+        add_rows = _cells(adds, self.centers).select(
+            F.lit("add").alias("op"), "vec_id", "cid", bl
+        )
+        del_rows = self.ids(batch_df, "purchase").select(
+            F.lit("del").alias("op"),
+            "vec_id",
+            F.lit(-1).cast("long").alias("cid"),
+            bl,
+        )
+        add_rows.unionByName(del_rows).write.mode("append").parquet(path)
+
+
+def _ann_oracle_ctes(del_stride: int, disjoint: bool) -> str:
+    """DuckDB CTEs of the ANN streaming oracles: the op sets ``adds`` and
+    ``dels`` (:class:`_AnnOps`' rule), the ``indexed`` ids (base ∪ adds),
+    the matched tombstones ``dead``, and their counts ``m``."""
+    add_par, del_par = (
+        ("WHERE e.vec_id % 2 = 1", "WHERE e.vec_id % 2 = 0") if disjoint else ("", "")
     )
-
-
-@query(
-    "stream_ann_index_maintenance",
-    # real readStream source (S8) + foreachBatch durable log (S9), the
-    # add path is a stream-static join against embeddings (T7), and the
-    # maintained artifact is the L3 frozen index
-    tags=("S8", "S9", "T7", "L3"),
-    oracle=f"""
-    WITH adds AS (
+    return f"""adds AS (
         SELECT DISTINCT e.vec_id
         FROM (SELECT event_id % {STREAM_ANN_MOD} AS vec_id FROM events
               WHERE event_type = 'signup'
                 AND event_id % {STREAM_ANN_ADD_STRIDE} = 0) s
-        JOIN embeddings e USING (vec_id)
+        JOIN embeddings e USING (vec_id) {add_par}
     ), dels AS (
         SELECT DISTINCT e.vec_id
         FROM (SELECT event_id % {STREAM_ANN_MOD} AS vec_id FROM events
               WHERE event_type = 'purchase'
-                AND event_id % {STREAM_ANN_DEL_STRIDE} = 0) s
-        JOIN embeddings e USING (vec_id)
+                AND event_id % {del_stride} = 0) s
+        JOIN embeddings e USING (vec_id) {del_par}
     ), indexed AS (
         SELECT vec_id FROM embeddings WHERE vec_id % 2 = 0
         UNION
@@ -1361,7 +1382,48 @@ def _ann_op_ids(
                (SELECT CAST(COUNT(*) AS BIGINT) FROM dels) AS n_deletes,
                (SELECT CAST(COUNT(*) AS BIGINT) FROM indexed) AS n_indexed,
                (SELECT CAST(COUNT(*) AS BIGINT) FROM dead) AS n_dead
+    )"""
+
+
+def _cells(frame: DataFrame, centers) -> DataFrame:
+    """``(vec_id, cid)`` cell map of ``frame`` under ``centers``."""
+    from ..operators.similarity import assign_to_centers
+
+    return assign_to_centers(frame, centers).select(
+        "vec_id", F.col("cid").cast("long").alias("cid")
     )
+
+
+def _maintained(
+    gen_cells: DataFrame, ops: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(live cells, indexed cells, tombstone ids) of a cell-map
+    generation plus its op tail. Tombstones are absolute until the next
+    generation: a re-added tombstoned id stays masked."""
+    adds = ops.where(F.col("op") == "add").dropDuplicates(
+        ["vec_id", "cid"]
+    ).select("vec_id", "cid")
+    tombs = ops.where(F.col("op") == "del").dropDuplicates(
+        ["vec_id"]
+    ).select("vec_id")
+    cells = gen_cells.unionByName(adds).dropDuplicates(["vec_id", "cid"])
+    return cells.join(tombs, "vec_id", "anti"), cells, tombs
+
+
+def _multi_batch(log: DataFrame) -> DataFrame:
+    """1-row ``multi_batch`` flag: the log holds >= 2 micro-batches. It
+    rides a report plan as a broadcast frame instead of a count job."""
+    return log.agg((F.count_distinct("batch_id") >= 2).cast("int").alias("multi_batch"))
+
+
+@query(
+    "stream_ann_index_maintenance",
+    # real readStream source (S8) + foreachBatch durable log (S9), the
+    # add path is a stream-static join against embeddings (T7), and the
+    # maintained artifact is the L3 frozen index
+    tags=("S8", "S9", "T7", "L3"),
+    oracle=f"""
+    WITH {_ann_oracle_ctes(STREAM_ANN_DEL_STRIDE, disjoint=False)}
     SELECT n_adds, n_deletes, n_indexed,
            n_indexed - n_dead AS n_live,
            n_dead * 1000000 // n_indexed AS deleted_ppm,
@@ -1423,125 +1485,53 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_maintenance_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as S
-    from .llm import _frozen_quantizer
 
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.where(F.col("vec_id") % 2 == 0)
-    n_lists, centers = _frozen_quantizer(e)
-
-    def _ops(df: DataFrame, etype: str, stride: int) -> DataFrame:
-        return _ann_op_ids(df, e, etype, stride)
+    ops = _AnnOps(spark, sf_dir, STREAM_ANN_DEL_STRIDE, disjoint=False)
 
     def _sink(log_dir: str):
-        def write(batch_df: DataFrame, batch_id: int) -> None:
-            adds = _ops(batch_df, "signup", STREAM_ANN_ADD_STRIDE)
-            add_rows = (
-                S.assign_to_centers(adds.join(e, "vec_id"), centers)
-                .select(
-                    F.lit("add").alias("op"),
-                    "vec_id",
-                    F.col("cid").cast("long").alias("cid"),
-                    F.lit(batch_id).alias("batch_id"),
-                )
-            )
-            del_rows = _ops(
-                batch_df, "purchase", STREAM_ANN_DEL_STRIDE
-            ).select(
-                F.lit("del").alias("op"),
-                "vec_id",
-                F.lit(-1).cast("long").alias("cid"),
-                F.lit(batch_id).alias("batch_id"),
-            )
-            add_rows.unionByName(del_rows).write.mode("append").parquet(
-                log_dir
-            )
-
-        return write
+        return lambda batch_df, batch_id: ops.write(batch_df, batch_id, log_dir)
 
     # batch twin over the same op table, recomputed from the raw events —
-    # stream-independent (events + embeddings only), so it materializes
-    # on a driver thread while the replay loop runs (_overlap_with_stream)
-    ev = load_table(spark, sf_dir, "events")
-    adds_b = _ops(ev, "signup", STREAM_ANN_ADD_STRIDE)
-    dels_b = _ops(ev, "purchase", STREAM_ANN_DEL_STRIDE).persist()
-    indexed = base.select("vec_id").unionByName(adds_b).distinct()
-    indexed_corpus = e.join(indexed, "vec_id", "semi").persist()
-    twin = (
-        S.assign_to_centers(
-            indexed_corpus.join(dels_b, "vec_id", "anti"), centers
-        )
-        .select("vec_id", F.col("cid").cast("long").alias("cid"))
-        .persist()
-    )
-    q = e.where(F.col("vec_id") < 20)
-    nprobe = max(4, n_lists // 2)
-    live_b = S.mask_tombstones(indexed_corpus, dels_b)
-    want = S.ivf_search(
-        q, live_b, k=5, nprobe=nprobe, cells=S.assign_to_centers(live_b, centers)
+    # stream-independent, so it materializes while the replay loop runs
+    twin = _cells(
+        ops.indexed_corpus.join(ops.dels_b, "vec_id", "anti"), ops.centers
     ).persist()
-
-    thread, errs = _overlap_with_stream(
-        spark, (twin, want),
-        "ann maintenance: batch twin + delete-verb search (overlapped)",
+    live_b = S.mask_tombstones(ops.indexed_corpus, ops.dels_b)
+    want = S.ivf_search(
+        ops.q,
+        live_b,
+        k=5,
+        nprobe=ops.nprobe,
+        cells=S.assign_to_centers(live_b, ops.centers),
+    ).persist()
+    log_dir, _q = _run_replay_foreachbatch(
+        spark, sf_dir, "annidx", _sink, overlap=(twin, want)
     )
-    try:
-        log_dir, _q = _run_replay_foreachbatch(
-            spark, sf_dir, "annidx", _sink
-        )
-    finally:
-        thread.join()
-    if errs:
-        raise errs[0]
 
     log = spark.read.parquet(log_dir)
-    add_log = log.where(F.col("op") == "add").dropDuplicates(
-        ["vec_id", "cid"]
-    ).select("vec_id", "cid")
-    tomb = log.where(F.col("op") == "del").dropDuplicates(["vec_id"]).select(
-        "vec_id"
-    )
-    # batch roster rides the report plan as a broadcast 1-row frame
-    # instead of a separate count job
-    roster = log.agg(
-        (F.count_distinct("batch_id") >= 2).cast("int").alias("multi_batch")
-    )
-
-    base_assign = S.assign_to_centers(base, centers).select(
-        "vec_id", F.col("cid").cast("long").alias("cid")
-    )
     # the maintained map and the twin each feed multiple consumers (two
     # exceptAll directions + the maintained-index search); both are
     # (id, cid) integer frames — persist so the Arrow assignment passes
     # run once, not per consumer (the learned_cellmap residue contract)
-    maintained = (
-        base_assign.unionByName(add_log)
-        .dropDuplicates(["vec_id", "cid"])
-        .join(tomb, "vec_id", "anti")
-        .persist()
-    )
+    maintained, _, tomb = _maintained(_cells(ops.base, ops.centers), log)
+    maintained = maintained.persist()
     cells_diff = sym_diff_count(maintained, twin, "__cells_diff")
 
     # partial-probe search equality: maintained index vs batch DELETE verb
-    got = S.ivf_search(q, e, k=5, nprobe=nprobe, cells=maintained).persist()
+    got = S.ivf_search(ops.q, ops.e, k=5, nprobe=ops.nprobe, cells=maintained).persist()
     search_diff = sym_diff_count(got, want, "__search_diff")
 
-    rep = S.tombstone_load_report(indexed_corpus, tomb).select(
+    rep = S.tombstone_load_report(ops.indexed_corpus, tomb).select(
         F.col("n_total").alias("n_indexed"),
         F.col("n_deleted").alias("__n_dead"),
         "deleted_ppm",
         "rebuild",
     )
-    counts = (
-        adds_b.agg(F.count(F.lit(1)).alias("n_adds"))
-        .crossJoin(
-            F.broadcast(dels_b.agg(F.count(F.lit(1)).alias("n_deletes")))
-        )
-    )
     report = (
-        counts.crossJoin(F.broadcast(rep))
+        ops.counts.crossJoin(F.broadcast(rep))
         .crossJoin(F.broadcast(cells_diff))
         .crossJoin(F.broadcast(search_diff))
-        .crossJoin(F.broadcast(roster))
+        .crossJoin(F.broadcast(_multi_batch(log)))
         .select(
             F.col("n_adds").cast("bigint").alias("n_adds"),
             F.col("n_deletes").cast("bigint").alias("n_deletes"),
@@ -1559,7 +1549,7 @@ def _ann_maintenance_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stream_corpus_admission pattern); same rows, lineage-free
         .localCheckpoint(eager=True)
     )
-    for frame in (dels_b, indexed_corpus, twin, want, maintained, got):
+    for frame in (ops.dels_b, ops.indexed_corpus, twin, want, maintained, got):
         frame.unpersist()
     return report
 
@@ -1641,6 +1631,11 @@ def _collect_bkts(df: DataFrame) -> list[int]:
     return sorted({r[0] for r in df.collect()})
 
 
+def _ddl_columns(ddl: str) -> list[tuple[str, str]]:
+    """``[(name, type), ...]`` of a flat ``"name type, ..."`` DDL string."""
+    return [tuple(c.strip().rsplit(" ", 1)) for c in ddl.split(",")]
+
+
 class _GenLog:
     """Generation-compacted, hash-bucket-partitioned parquet state log —
     the durable-state shape of the streaming admission loop.
@@ -1710,12 +1705,9 @@ class _GenLog:
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            cols = [
-                c.strip().rsplit(" ", 1) for c in schema.split(",")
-            ]
             data_cols = [
                 (n, getattr(pa, self._ARROW_TYPES[t])())
-                for n, t in cols
+                for n, t in _ddl_columns(schema)
                 if n != bucket_col and n != log_col
             ]
             tbl = pa.table(
@@ -2096,12 +2088,8 @@ def _corpus_admission_body(
             def _state_row(df, log_name, bkt_col, **cols):
                 """Project ``df`` onto the full multiplexed schema with
                 nulls in the columns its sub-log does not carry."""
-                names_types = [
-                    c.strip().rsplit(" ", 1)
-                    for c in _ADM_STATE_SCHEMA.split(",")
-                ]
                 out = []
-                for name, typ in names_types:
+                for name, typ in _ddl_columns(_ADM_STATE_SCHEMA):
                     if name == "log":
                         out.append(F.lit(log_name).alias("log"))
                     elif name == "bkt":
@@ -2183,29 +2171,9 @@ def _corpus_admission_body(
         _inc_gated(d, keepers_u, contaminated, _inc_neardup_drops(ver_u))
     ).persist()
 
-    from pyspark import InheritableThread
-
-    twin_err: list[BaseException] = []
-
-    def _fill_twin() -> None:
-        try:
-            spark.sparkContext.setJobDescription(
-                "corpus admission: from-scratch twin (overlapped)"
-            )
-            twin.count()
-        except BaseException as exc:  # re-raised on the main thread
-            twin_err.append(exc)
-
-    twin_thread = InheritableThread(target=_fill_twin)
-    twin_thread.start()
-    try:
-        log_dir, _q = _run_replay_foreachbatch(
-            spark, sf_dir, "corpadm", _sink, source="documents"
-        )
-    finally:
-        twin_thread.join()
-    if twin_err:
-        raise twin_err[0]
+    log_dir, _q = _run_replay_foreachbatch(
+        spark, sf_dir, "corpadm", _sink, source="documents", overlap=(twin,)
+    )
 
     final_log = _GenLog(
         spark, log_dir, "state", _ADM_STATE_SCHEMA, "bkt", log_col="log",
@@ -2224,9 +2192,7 @@ def _corpus_admission_body(
     # log; compaction preserves batch_id, so the roster survives
     # generations. The >=2 test rides the report plan as a broadcast
     # 1-row frame instead of a separate count job.
-    roster = final_log.read("digests").agg(
-        (F.count_distinct("batch_id") >= 2).cast("int").alias("multi_batch")
-    )
+    roster = _multi_batch(final_log.read("digests"))
 
     diff = sym_diff_count(streamed, twin, "__n_diff")
     report = (
@@ -2275,30 +2241,7 @@ STREAM_CMP_THRESHOLD_PPM = 100_000
     "stream_ann_index_compaction",
     tags=("S8", "S9", "T7", "L3"),
     oracle=f"""
-    WITH adds AS (
-        SELECT DISTINCT e.vec_id
-        FROM (SELECT event_id % {STREAM_ANN_MOD} AS vec_id FROM events
-              WHERE event_type = 'signup'
-                AND event_id % {STREAM_ANN_ADD_STRIDE} = 0) s
-        JOIN embeddings e USING (vec_id) WHERE e.vec_id % 2 = 1
-    ), dels AS (
-        SELECT DISTINCT e.vec_id
-        FROM (SELECT event_id % {STREAM_ANN_MOD} AS vec_id FROM events
-              WHERE event_type = 'purchase'
-                AND event_id % {STREAM_CMP_DEL_STRIDE} = 0) s
-        JOIN embeddings e USING (vec_id) WHERE e.vec_id % 2 = 0
-    ), indexed AS (
-        SELECT vec_id FROM embeddings WHERE vec_id % 2 = 0
-        UNION
-        SELECT vec_id FROM adds
-    ), dead AS (
-        SELECT vec_id FROM indexed INTERSECT SELECT vec_id FROM dels
-    ), m AS (
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM adds) AS n_adds,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM dels) AS n_deletes,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM indexed) AS n_indexed,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM dead) AS n_dead
-    )
+    WITH {_ann_oracle_ctes(STREAM_CMP_DEL_STRIDE, disjoint=True)}
     SELECT n_adds, n_deletes, n_indexed,
            n_indexed - n_dead AS n_live,
            (n_dead * 1000000 // n_indexed) > {STREAM_CMP_THRESHOLD_PPM}
@@ -2370,32 +2313,22 @@ def stream_ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as S
-    from .llm import _frozen_quantizer
 
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.where(F.col("vec_id") % 2 == 0)
-    n_lists, centers = _frozen_quantizer(e)
-    base_assign = S.assign_to_centers(base, centers).select(
-        "vec_id", F.col("cid").cast("long").alias("cid")
-    )
+    ops = _AnnOps(spark, sf_dir, STREAM_CMP_DEL_STRIDE, disjoint=True)
 
-    def _ops(df: DataFrame, etype: str, stride: int, parity: int) -> DataFrame:
-        return _ann_op_ids(df, e, etype, stride, parity)
-
-    def _maintained(
-        gen_cells: DataFrame, ops: DataFrame
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """(live cells, indexed ids, matched tombstones) of a generation
-        plus its op tail."""
-        adds = ops.where(F.col("op") == "add").dropDuplicates(
-            ["vec_id", "cid"]
-        ).select("vec_id", "cid")
-        tombs = ops.where(F.col("op") == "del").dropDuplicates(
-            ["vec_id"]
-        ).select("vec_id")
-        cells = gen_cells.unionByName(adds).dropDuplicates(["vec_id", "cid"])
-        dead = cells.join(tombs, "vec_id", "semi").select("vec_id").distinct()
-        return cells.join(tombs, "vec_id", "anti"), cells, dead
+    def _ids_and_dead(cells: DataFrame, tombs: DataFrame) -> DataFrame:
+        """1-row (__n, __d): distinct indexed ids and how many of them a
+        tombstone matches — ONE left join over one evaluation of the
+        cells union (dead == indexed ∩ tombstones)."""
+        return (
+            cells.select("vec_id")
+            .distinct()
+            .join(tombs.withColumn("__d", F.lit(1)), "vec_id", "left")
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.coalesce(F.sum("__d"), F.lit(0)).alias("__d"),
+            )
+        )
 
     def _sink(log_dir: str):
         spark.createDataFrame(
@@ -2404,28 +2337,12 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(
             [(-1, -1)], "gen_batch long, batch_id long"
         ).write.mode("overwrite").parquet(f"{log_dir}/genlog")
-        base_assign.write.mode("overwrite").parquet(f"{log_dir}/gen_-1")
+        _cells(ops.base, ops.centers).write.mode("overwrite").parquet(
+            f"{log_dir}/gen_-1"
+        )
 
         def write(batch_df: DataFrame, batch_id: int) -> None:
-            bl = F.lit(batch_id).cast("long")
-            adds = _ops(batch_df, "signup", STREAM_ANN_ADD_STRIDE, 1)
-            add_rows = S.assign_to_centers(adds.join(e, "vec_id"), centers).select(
-                F.lit("add").alias("op"),
-                "vec_id",
-                F.col("cid").cast("long").alias("cid"),
-                bl.alias("batch_id"),
-            )
-            del_rows = _ops(
-                batch_df, "purchase", STREAM_CMP_DEL_STRIDE, 0
-            ).select(
-                F.lit("del").alias("op"),
-                "vec_id",
-                F.lit(-1).cast("long").alias("cid"),
-                bl.alias("batch_id"),
-            )
-            add_rows.unionByName(del_rows).write.mode("append").parquet(
-                f"{log_dir}/ops"
-            )
+            ops.write(batch_df, batch_id, f"{log_dir}/ops")
             # trigger check over the CURRENT generation + its op tail
             # (this batch's ops included); state reads exclude rows this
             # attempt may have half-written on a previous crash
@@ -2435,37 +2352,17 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.max("gen_batch"))
                 .collect()[0][0]
             )
-            gen_cells = spark.read.parquet(f"{log_dir}/gen_{g}")
-            ops = (
+            tail = (
                 spark.read.parquet(f"{log_dir}/ops")
                 .where(
                     (F.col("batch_id") > g) & (F.col("batch_id") <= batch_id)
                 )
                 .dropDuplicates(["op", "vec_id", "cid"])
             )
-            live, cells, _dead = _maintained(gen_cells, ops)
-            # ONE trigger-check job AND one evaluation of the cells
-            # subtree: dead == indexed ∩ tombstones, so the left join
-            # marks the distinct indexed ids against the (tiny, distinct)
-            # tombstone ids directly — the previous `dead` operand was a
-            # second full evaluation of the gen∪ops union per batch
-            tomb_ids = (
-                ops.where(F.col("op") == "del")
-                .dropDuplicates(["vec_id"])
-                .select("vec_id")
+            live, cells, tombs = _maintained(
+                spark.read.parquet(f"{log_dir}/gen_{g}"), tail
             )
-            n_idx, n_dead = (
-                cells.select("vec_id")
-                .distinct()
-                .join(
-                    tomb_ids.withColumn("__d", F.lit(1)), "vec_id", "left"
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("__d"), F.lit(0)).alias("d"),
-                )
-                .collect()[0]
-            )
+            n_idx, n_dead = _ids_and_dead(cells, tombs).collect()[0]
             if n_idx and (n_dead * 1_000_000) // n_idx > STREAM_CMP_THRESHOLD_PPM:
                 live.write.mode("overwrite").parquet(
                     f"{log_dir}/gen_{batch_id}"
@@ -2477,35 +2374,16 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         return write
 
     # batch twin — stream-independent (events + embeddings only): its
-    # compaction-verb cell map and the twin-side search materialize on a
-    # driver thread while the replay loop runs (_overlap_with_stream)
-    ev = load_table(spark, sf_dir, "events")
-    adds_b = _ops(ev, "signup", STREAM_ANN_ADD_STRIDE, 1)
-    dels_b = _ops(ev, "purchase", STREAM_CMP_DEL_STRIDE, 0).persist()
-    indexed = base.select("vec_id").unionByName(adds_b).distinct()
-    indexed_corpus = e.join(indexed, "vec_id", "semi").persist()
-    live_twin, centers_t = S.ivf_compact(indexed_corpus, centers, dels_b)
-    twin_cells = (
-        S.assign_to_centers(live_twin, centers_t)
-        .select("vec_id", F.col("cid").cast("long").alias("cid"))
-        .persist()
+    # compaction-verb cell map and the twin-side search materialize while
+    # the replay loop runs
+    live_twin, centers_t = S.ivf_compact(ops.indexed_corpus, ops.centers, ops.dels_b)
+    twin_cells = _cells(live_twin, centers_t).persist()
+    want = S.ivf_search(
+        ops.q, ops.e, k=5, nprobe=ops.nprobe, cells=twin_cells
+    ).persist()
+    log_dir, _q = _run_replay_foreachbatch(
+        spark, sf_dir, "anncmp", _sink, overlap=(twin_cells, want)
     )
-    q = e.where(F.col("vec_id") < 20)
-    nprobe = max(4, n_lists // 2)
-    want = S.ivf_search(q, e, k=5, nprobe=nprobe, cells=twin_cells).persist()
-
-    thread, errs = _overlap_with_stream(
-        spark, (twin_cells, want),
-        "ann compaction: batch twin + twin-side search (overlapped)",
-    )
-    try:
-        log_dir, _q = _run_replay_foreachbatch(
-            spark, sf_dir, "anncmp", _sink
-        )
-    finally:
-        thread.join()
-    if errs:
-        raise errs[0]
 
     genlog = spark.read.parquet(f"{log_dir}/genlog").dropDuplicates(
         ["gen_batch"]
@@ -2517,59 +2395,35 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("batch_id") > g_final)
         .dropDuplicates(["op", "vec_id", "cid"])
     )
-    live_s, cells_s, _dead_s = _maintained(
+    live_s, cells_s, tomb_tail = _maintained(
         spark.read.parquet(f"{log_dir}/gen_{g_final}"), ops_tail
     )
     live_s = live_s.persist()
-    tomb_tail = (
-        ops_tail.where(F.col("op") == "del")
-        .dropDuplicates(["vec_id"])
-        .select("vec_id")
-    )
-    # one evaluation of the cells union: count + matched-tombstone count
-    # from a single left-join aggregate (the trigger check's shape)
-    final_ppm = (
-        cells_s.select("vec_id")
-        .distinct()
-        .join(tomb_tail.withColumn("__d", F.lit(1)), "vec_id", "left")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.coalesce(F.sum("__d"), F.lit(0)).alias("__d"),
-        )
-        .select(
-            F.expr(
-                "CASE WHEN __n = 0 THEN 0 ELSE __d * 1000000L div __n END"
-            ).alias("__ppm")
-        )
+    final_ppm = _ids_and_dead(cells_s, tomb_tail).select(
+        F.expr(
+            "CASE WHEN __n = 0 THEN 0 ELSE __d * 1000000L div __n END"
+        ).alias("__ppm")
     )
 
     cells_diff = sym_diff_count(live_s, twin_cells, "__cells_diff")
     # each search feeds both exceptAll directions — persist the k·queries
     # result rows so the probe+rank pipelines evaluate once, not twice
-    got = S.ivf_search(q, e, k=5, nprobe=nprobe, cells=live_s).persist()
+    got = S.ivf_search(ops.q, ops.e, k=5, nprobe=ops.nprobe, cells=live_s).persist()
     search_diff = sym_diff_count(got, want, "__search_diff")
-    counts = adds_b.agg(F.count(F.lit(1)).alias("n_adds")).crossJoin(
-        F.broadcast(dels_b.agg(F.count(F.lit(1)).alias("n_deletes")))
-    )
-    dead_b = indexed_corpus.select("vec_id").join(dels_b, "vec_id", "semi")
-    stats = indexed_corpus.agg(
+    dead_b = ops.indexed_corpus.select("vec_id").join(ops.dels_b, "vec_id", "semi")
+    stats = ops.indexed_corpus.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_indexed")
     ).crossJoin(
         F.broadcast(
             dead_b.agg(F.count(F.lit(1)).cast("bigint").alias("__n_dead"))
         )
     )
-    # batch roster rides the report plan as a broadcast 1-row frame
-    # instead of a separate count job
-    roster = spark.read.parquet(f"{log_dir}/ops").agg(
-        (F.count_distinct("batch_id") >= 2).cast("int").alias("multi_batch")
-    )
     report = (
-        counts.crossJoin(F.broadcast(stats))
+        ops.counts.crossJoin(F.broadcast(stats))
         .crossJoin(F.broadcast(cells_diff))
         .crossJoin(F.broadcast(search_diff))
         .crossJoin(F.broadcast(final_ppm))
-        .crossJoin(F.broadcast(roster))
+        .crossJoin(F.broadcast(_multi_batch(spark.read.parquet(f"{log_dir}/ops"))))
         .select(
             F.col("n_adds").cast("bigint").alias("n_adds"),
             F.col("n_deletes").cast("bigint").alias("n_deletes"),
@@ -2589,6 +2443,6 @@ def _ann_compaction_body(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stream_corpus_admission pattern); same rows, lineage-free
         .localCheckpoint(eager=True)
     )
-    for frame in (dels_b, indexed_corpus, twin_cells, want, live_s, got):
+    for frame in (ops.dels_b, ops.indexed_corpus, twin_cells, want, live_s, got):
         frame.unpersist()
     return report

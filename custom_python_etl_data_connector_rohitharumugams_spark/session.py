@@ -81,25 +81,59 @@ def get_spark(app_name: str = "etl-connector-spark", cpus: int | str | None = No
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
     for k, v in {**STATIC_CONF, **ENGINE_CONF}.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # If an existing session was reused, re-assert runtime-settable confs.
-    for k, v in ENGINE_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a live session; builder already applied it
-    return spark
+    # If an existing session was reused, configure re-asserts the
+    # runtime-settable confs (static ones the builder already applied).
+    return configure(builder.getOrCreate())
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime-settable conf to an externally-built session
-    (the driver passes its own SparkSession to ``__spark_entry__.entry``)."""
+    """Apply the engine's runtime-settable conf to a session and ship the
+    package to its Python workers (the driver passes its own SparkSession
+    to ``__spark_entry__.entry``)."""
     for k, v in ENGINE_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
+    _ship_package(spark)
     return spark
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make this package importable in executor-side Python workers, once
+    per Spark application (memoized on its SparkContext).
+
+    UDFs, ``mapInPandas`` bodies and the Python DataSource classes are
+    cloudpickled BY REFERENCE, so workers must be able to import the
+    package — which fails whenever the driver wasn't launched from the
+    repo root. addPyFile distributes a zip of the package and prepends it
+    to every worker's sys.path; doing it at session start means no query
+    changes the workers' path mid-session."""
+    sc = spark.sparkContext
+    memo(sc, ("shipped_package",), lambda: _zip_and_add_package(sc))
+
+
+def _zip_and_add_package(sc) -> None:
+    import hashlib
+    import tempfile
+    import zipfile
+    from pathlib import Path
+
+    from . import __version__
+
+    pkg_dir = Path(__file__).parent
+    sources = sorted(pkg_dir.rglob("*.py"))
+    # content-derived cache key: a version-only key would keep shipping a
+    # stale zip after source edits (executors would import old code)
+    digest = hashlib.sha256(
+        "".join(f"{p.relative_to(pkg_dir)}:{p.stat().st_mtime_ns}:{p.stat().st_size};" for p in sources).encode()
+    ).hexdigest()[:16]
+    zpath = Path(tempfile.gettempdir()) / f"{pkg_dir.name}-{__version__}-{digest}.zip"
+    if not zpath.exists():
+        with zipfile.ZipFile(zpath, "w") as zf:
+            for py in sources:
+                zf.write(py, arcname=str(py.relative_to(pkg_dir.parent)))
+    sc.addPyFile(str(zpath))
 
 
 _MEMO: "WeakKeyDictionary[Any, dict[tuple, Any]]" = WeakKeyDictionary()

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,7 +24,6 @@ from ..functions.json_utils import (
     drop_empty_payloads,
     sanitize_field_names,
 )
-from ..session import memo
 from .docsink import write_collection
 from .restapi import RestApiDataSource
 
@@ -56,44 +54,7 @@ class ConnectorConfig:
     sink_buckets: int = 16
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Make this package importable in executor-side Python workers, once
-    per Spark application (memoized on its SparkContext).
-
-    The Python DataSource class is cloudpickled BY REFERENCE, so workers must
-    be able to import the package — which fails whenever the driver wasn't
-    launched from the repo root. addPyFile distributes a zip of the package
-    and prepends it to every worker's sys.path (works post-session-start)."""
-    sc = spark.sparkContext
-    memo(sc, ("shipped_package",), lambda: _zip_and_add_package(sc))
-
-
-def _zip_and_add_package(sc) -> None:
-    import tempfile
-    import zipfile
-
-    from .. import __version__
-    import custom_python_etl_data_connector_rohitharumugams_spark as pkg
-
-    pkg_dir = Path(pkg.__file__).parent
-    sources = sorted(pkg_dir.rglob("*.py"))
-    # content-derived cache key: a version-only key would keep shipping a
-    # stale zip after source edits (executors would import old code)
-    import hashlib
-
-    digest = hashlib.sha256(
-        "".join(f"{p.relative_to(pkg_dir)}:{p.stat().st_mtime_ns}:{p.stat().st_size};" for p in sources).encode()
-    ).hexdigest()[:16]
-    zpath = Path(tempfile.gettempdir()) / f"{pkg_dir.name}-{__version__}-{digest}.zip"
-    if not zpath.exists():
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for py in sources:
-                zf.write(py, arcname=str(py.relative_to(pkg_dir.parent)))
-    sc.addPyFile(str(zpath))
-
-
 def register_sources(spark: SparkSession) -> None:
-    _ship_package(spark)
     spark.dataSource.register(RestApiDataSource)
 
 

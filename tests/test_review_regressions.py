@@ -1228,6 +1228,77 @@ def test_session_artifacts_and_conf_scopes_live_only_in_session_module():
     assert offenders == []
 
 
+def _stream_start_sites(root):
+    """``{(file, top-level function, needle)}`` for every line of the
+    package at ``root`` that starts or awaits a streaming query, names its
+    checkpoint or starts an overlap thread outside ``_run_stream``."""
+    import ast
+
+    needles = ("awaitTermination(", "checkpointLocation", "InheritableThread(")
+    sites = set()
+    for p in sorted(root.rglob("*.py")):
+        text = p.read_text()
+        spans = [
+            (n.name, n.lineno, n.end_lineno)
+            for n in ast.parse(text).body
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            owner = next((name for name, a, b in spans if a <= i <= b), "<module>")
+            if owner == "_run_stream" and p.name == "stream_batch.py":
+                continue
+            sites.update((p.name, owner, n) for n in needles if n in line)
+    return sites
+
+
+def test_streaming_queries_start_only_in_run_stream():
+    """One streaming run: ``_run_stream`` is the only place that starts a
+    streaming query, waits for it, sets its checkpoint and starts the
+    overlap thread, so the conf scope, the 300 s guard and the checkpoint
+    cleanup cannot drift between hand-written copies."""
+    from pathlib import Path
+
+    import custom_python_etl_data_connector_rohitharumugams_spark as pkg
+
+    assert _stream_start_sites(Path(pkg.__file__).parent) == set()
+
+
+def test_configure_ships_the_package_once_per_context(spark, monkeypatch):
+    """Python workers import the package from a zip shipped at session
+    start: ``configure`` ships it once per SparkContext, so UDF and data
+    source queries work from any working directory."""
+    from custom_python_etl_data_connector_rohitharumugams_spark import session
+
+    builds = []
+    monkeypatch.setattr(session, "_zip_and_add_package", builds.append)
+    session._MEMO.get(spark.sparkContext, {}).pop(("shipped_package",), None)
+    session.configure(spark)
+    session.configure(spark)
+    assert builds == [spark.sparkContext]
+
+
+def test_python_sink_keeps_one_landing_dir_per_process(spark):
+    """The landing dir of stream_python_sink_exactly_once is one per
+    (scale factor, process), cleared at start: repeated runs must not leave
+    a directory per call behind."""
+    import glob
+    import os
+    import tempfile
+
+    from custom_python_etl_data_connector_rohitharumugams_spark.plans.stream_batch import (
+        _sf_tmp,
+        stream_python_sink_exactly_once,
+    )
+
+    pattern = f"{tempfile.gettempdir()}/sg_pysink*land*"
+    before = set(glob.glob(pattern))
+    for _ in range(2):
+        assert stream_python_sink_exactly_once(spark, SF).collect()[0].n_batches == 2
+    after = set(glob.glob(pattern))
+    assert len(after - before) <= 1
+    assert _sf_tmp("pysink", SF, f"land_{os.getpid()}") in after
+
+
 def test_ivf_cell_column_and_path_tag_live_in_one_module():
     """One IVF cell-map shape and one path tag: the private IVF cell column
     (which callers had to rename ``cid`` into) may appear only in
