@@ -30,13 +30,10 @@ changes gradient rows and breaks the planted-pair oracle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .multimodal import _parse_bmp_header
+from .multimodal import _bmp_bytes, _parse_bmp_header, map_rows
 
 #: canonical grid and the base image dims (exact multiples of the grid,
 #: so block sums replace means with no rationals)
@@ -64,22 +61,12 @@ def _ih_pixel(doc_id: int, x: int, y: int) -> int:
 def _gray_bmp_bytes(doc_id: int, scale: int) -> bytes:
     """A REAL 24-bit BMP of the doc's luminance grid at ``scale`` x the
     base dims — upscaling by pixel replication (nearest neighbor), R=G=B."""
-    import struct
 
-    w, h = IH_BASE_W * scale, IH_BASE_H * scale
-    stride = ((w * 3 + 3) // 4) * 4
-    img_size = stride * h
-    head = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0)
-    rows = []
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = bytearray()
-        for x in range(w):
-            p = _ih_pixel(doc_id, x // scale, y // scale)
-            row += bytes((p, p, p))
-        row += b"\x00" * (stride - len(row))
-        rows.append(bytes(row))
-    return head + info + b"".join(rows)
+    def gray(x: int, y: int) -> tuple[int, int, int]:
+        p = _ih_pixel(doc_id, x // scale, y // scale)
+        return p, p, p
+
+    return _bmp_bytes(IH_BASE_W * scale, IH_BASE_H * scale, gray)
 
 
 def synth_dhash_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -87,25 +74,15 @@ def synth_dhash_corpus(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pixel-replicated twin at doc_id + IH_PLANT_OFFSET for every
     doc_id % IH_TWIN_MOD == 0 — the 1->N batch expansion shape of the
     container tiers, payloads born on the executors."""
-    src = df.select(F.col(id_col).alias("doc_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, payloads = [], []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                ids.append(doc_id)
-                payloads.append(_gray_bmp_bytes(doc_id, 1))
-                if doc_id % IH_TWIN_MOD == 0:
-                    ids.append(doc_id + IH_PLANT_OFFSET)
-                    payloads.append(_gray_bmp_bytes(doc_id, 2))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "data": payloads}
-            )
+    def build(doc_id: int):
+        yield doc_id, _gray_bmp_bytes(doc_id, 1)
+        if doc_id % IH_TWIN_MOD == 0:
+            yield doc_id + IH_PLANT_OFFSET, _gray_bmp_bytes(doc_id, 2)
 
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return map_rows(
+        df.select(F.col(id_col).alias("doc_id")), build, "doc_id long, data binary"
+    )
 
 
 def dhash_bmp(df: DataFrame) -> DataFrame:
@@ -116,46 +93,28 @@ def dhash_bmp(df: DataFrame) -> DataFrame:
     yields no row."""
     import numpy as np
 
-    src = df.select("doc_id", "data")
+    def dhash(doc_id: int, raw: bytes):
+        parsed = _parse_bmp_header(raw)
+        if parsed is None:
+            return
+        w, h, off, stride = parsed
+        if w % IH_GRID_W or h % IH_GRID_H:
+            return  # grid requires exact-multiple dims
+        m = np.empty((h, w), dtype=np.int64)
+        for yrow in range(h):
+            base = off + yrow * stride
+            row = np.frombuffer(raw, dtype=np.uint8, count=w * 3, offset=base)
+            m[h - 1 - yrow] = row[2::3]  # R channel, image orientation
+        s = m.reshape(IH_GRID_H, h // IH_GRID_H, IH_GRID_W, w // IH_GRID_W).sum(axis=(1, 3))
+        bits = (s[:, 1:] > s[:, :-1]).astype(np.uint64).ravel()
+        val = 0
+        for b in bits:
+            val = (val << 1) | int(b)
+        if val >= 1 << 63:
+            val -= 1 << 64  # two's complement into a Spark long
+        yield doc_id, val
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, hashes = [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                parsed = _parse_bmp_header(raw)
-                if parsed is None:
-                    continue
-                w, h, off, stride = parsed
-                if w % IH_GRID_W or h % IH_GRID_H:
-                    continue  # grid requires exact-multiple dims
-                m = np.empty((h, w), dtype=np.int64)
-                for yrow in range(h):
-                    base = off + yrow * stride
-                    row = np.frombuffer(raw, dtype=np.uint8, count=w * 3, offset=base)
-                    m[h - 1 - yrow] = row[2::3]  # R channel, image orientation
-                s = m.reshape(
-                    IH_GRID_H, h // IH_GRID_H, IH_GRID_W, w // IH_GRID_W
-                ).sum(axis=(1, 3))
-                bits = (s[:, 1:] > s[:, :-1]).astype(np.uint64).ravel()
-                val = 0
-                for b in bits:
-                    val = (val << 1) | int(b)
-                if val >= 1 << 63:
-                    val -= 1 << 64  # two's complement into a Spark long
-                ids.append(int(doc_id))
-                hashes.append(val)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, dhash long")
+    return map_rows(df.select("doc_id", "data"), dhash, "doc_id long, dhash long", contain=True)
 
 
 def dhash_duplicate_pairs(hashed: DataFrame) -> DataFrame:

@@ -27,23 +27,119 @@ The only remaining fake is the FORMAT-AGNOSTIC stand-in
 Spark-side plumbing — schema, batch iteration, partition behavior, UDF
 signature — independently of any codec; swapping in PIL/torchaudio
 means replacing ``_fake_decode_batch`` only.
+
+Every per-row codec here and in the sibling media modules (npy, imagehash,
+tarshard) runs through ONE payload map, :func:`map_rows`: one
+``mapInPandas`` pass that skips empty batches and any input row holding a
+NULL, hands ``fn`` the row's keys as ``int`` and payloads as ``bytes``,
+materializes ``fn``'s output rows inside the ``try`` (a payload that fails
+partway yields no rows), drops the rows of a payload whose ``fn`` raises
+one of :data:`CORRUPT` when the caller asks for containment (every
+decoder; never a synthesizer, whose bug must fail the task), and takes
+the output names and dtypes from a DDL schema. Only ``decode_media``
+(NULL payload -> NULL-metadata row) and ``spectral_features`` (one FFT
+per batch) keep their own batch loops.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import io
+import struct
+import tarfile
+import wave
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DataType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+#: what a decoder's ``fn`` raises on a corrupt payload — the union of the
+#: codecs' failure modes. MemoryError and RecursionError stay out on
+#: purpose: a decoder bounds its own allocations and nesting (see
+#: extract_mp4_samples), so hitting either is a bug that fails the task.
+CORRUPT = (
+    ValueError,
+    IndexError,
+    EOFError,
+    OSError,
+    struct.error,
+    zlib.error,
+    wave.Error,
+    tarfile.TarError,
+)
+
+_PANDAS_DTYPES = {"long": "int64", "integer": "int32", "boolean": "bool"}
+
+
+def map_rows(
+    src: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: str,
+    *,
+    contain: bool = False,
+) -> DataFrame:
+    """The one per-row payload map: ``fn(*row)`` over every row of ``src``
+    (integer keys arrive as ``int``, binary payloads as ``bytes``), each
+    call returning 0..N output rows as tuples in ``schema`` order.
+
+    Empty batches and rows holding a NULL are skipped. ``fn``'s rows are
+    materialized inside the ``try``, so a payload that fails partway
+    yields no rows; with ``contain=True`` a payload whose ``fn`` raises
+    one of :data:`CORRUPT` yields none instead of failing the task.
+    ``schema`` is a DDL string; the output frame takes its column names
+    and dtypes from it."""
+    convert = [bytes if isinstance(f.dataType, BinaryType) else int for f in src.schema]
+    cols = [
+        (f.name, _PANDAS_DTYPES.get(f.dataType.typeName(), "object"))
+        for f in DataType.fromDDL(schema)
+    ]
+    caught = CORRUPT if contain else ()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            rows: list[tuple] = []
+            for vals in zip(*(pdf[c] for c in pdf.columns)):
+                if any(pd.isna(v) for v in vals):
+                    continue
+                try:
+                    got = list(fn(*(c(v) for c, v in zip(convert, vals))))
+                except caught:
+                    continue
+                rows += got
+            yield pd.DataFrame(
+                {
+                    name: pd.Series([r[i] for r in rows], dtype=dtype)
+                    for i, (name, dtype) in enumerate(cols)
+                }
+            )
+
+    return src.mapInPandas(run, schema=schema)
+
+
+def _synth(
+    df: DataFrame, id_col: str, build: Callable[[int], bytes], key: str = "doc_id"
+) -> DataFrame:
+    """``(key, data)`` with one ``build(id)`` file per input id, born on
+    the executors — the shape of every synthesizer below."""
+    return map_rows(
+        df.select(F.col(id_col).alias(key)),
+        lambda k: [(k, build(k))],
+        f"{key} long, data binary",
+    )
+
 
 #: the engine-wide media column convention
 MEDIA_SCHEMA = StructType(
@@ -122,14 +218,7 @@ def decode_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return src.mapInPandas(run, schema=DECODED_SCHEMA)
 
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_id", IntegerType()),
-        StructField("n_bytes", LongType()),
-        StructField("frame_md5", StringType()),
-    ]
-)
+FRAME_SCHEMA = "doc_id long, frame_id int, n_bytes long, frame_md5 string"
 
 
 def sample_frames(df: DataFrame, n_frames: int = 4, id_col: str = "doc_id") -> DataFrame:
@@ -138,42 +227,17 @@ def sample_frames(df: DataFrame, n_frames: int = 4, id_col: str = "doc_id") -> D
     row per frame — a 1->N Arrow batch expansion, the shape a real
     frame-extractor (ffmpeg/decord) produces. The fake extractor is
     deterministic byte slicing + md5, so the whole Python path gets a full
-    oracle; payload bytes never leave the executors."""
-    import hashlib
+    oracle; payload bytes never leave the executors. A NULL id or a
+    media-less doc yields no frames (map_rows' NULL skip)."""
+
+    def frames(doc_id: int, payload: bytes):
+        n = len(payload)
+        for k in range(n_frames):
+            frame = payload[k * n // n_frames : (k + 1) * n // n_frames]
+            yield doc_id, k, len(frame), hashlib.md5(frame).hexdigest()
 
     src = df.select(F.col(id_col).alias("doc_id"), F.col("media.data").alias("data"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, fids, sizes, digests = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["data"]):
-                # a NULL id or media-less doc yields no frames, not a
-                # crash: Arrow hands a nullable long column to pandas as
-                # float64 with NaN, and appending that NaN would blow up
-                # the int64 Series below (the one-null-row-kills-the-job
-                # failure decode_media already guards against)
-                if payload is None or pd.isna(doc_id):
-                    continue
-                n = len(payload)
-                for k in range(n_frames):
-                    lo, hi = k * n // n_frames, (k + 1) * n // n_frames
-                    frame = payload[lo:hi]
-                    ids.append(int(doc_id))
-                    fids.append(k)
-                    sizes.append(len(frame))
-                    digests.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_id": pd.Series(fids, dtype="int32"),
-                    "n_bytes": pd.Series(sizes, dtype="int64"),
-                    "frame_md5": digests,
-                }
-            )
-
-    return src.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(src, frames, FRAME_SCHEMA)
 
 
 #: synthesized-WAV parameters: mono PCM16 at 8 kHz; frame count and the
@@ -191,52 +255,32 @@ def _wav_samples(doc_id: int) -> list[int]:
     return [((doc_id * 31 + i * 17) % 2003) - 1001 for i in range(n)]
 
 
+def _pcm16_wav(samples: list[int]) -> bytes:
+    """A genuine mono PCM16 RIFF/WAVE file at ``WAV_SAMPLE_RATE`` — the
+    stdlib ``wave`` writer's 44-byte canonical header + little-endian
+    int16 frames. The one WAV writer of the audio tiers."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(WAV_SAMPLE_RATE)
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return buf.getvalue()
+
+
 def synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, data) with REAL RIFF/WAVE PCM16 payloads — the stdlib
-    ``wave`` writer emits a genuine file per row (44-byte canonical header
-    + little-endian int16 frames), Arrow-batched so payload bytes are
-    born on the executors and never touch the driver. This is the media
-    INGEST boundary a production pipeline has anyway (bytes arrive from
-    object storage); here the bytes are synthesized from ``_wav_samples``
-    so that decoding them is exactly checkable."""
-    import io
-    import struct
-    import wave
-
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                s = _wav_samples(int(doc_id))
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(WAV_SAMPLE_RATE)
-                    w.writeframes(struct.pack(f"<{len(s)}h", *s))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(
-        run, schema="doc_id long, data binary"
-    )
+    """(doc_id, data) with REAL RIFF/WAVE PCM16 payloads — one genuine
+    file per row, Arrow-batched so payload bytes are born on the
+    executors and never touch the driver. This is the media INGEST
+    boundary a production pipeline has anyway (bytes arrive from object
+    storage); here the bytes are synthesized from ``_wav_samples`` so
+    that decoding them is exactly checkable."""
+    return _synth(df, id_col, lambda d: _pcm16_wav(_wav_samples(d)))
 
 
-WAV_DECODED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_channels", LongType()),
-        StructField("sample_rate", LongType()),
-        StructField("n_frames", LongType()),
-        StructField("peak", LongType()),
-        StructField("sample_sum", LongType()),
-    ]
+WAV_DECODED_SCHEMA = (
+    "doc_id long, n_channels long, sample_rate long, n_frames long, "
+    "peak long, sample_sum long"
 )
 
 
@@ -250,42 +294,14 @@ def decode_wav(df: DataFrame) -> DataFrame:
     channel). At 100 TB this is the multimodal scan shape: decode runs
     where the bytes live, one task per Arrow batch, and only the tiny
     feature row ever shuffles."""
-    import io
-    import struct
-    import wave
 
-    src = df.select("doc_id", "data")
+    def decode(doc_id: int, payload: bytes):
+        with wave.open(io.BytesIO(payload)) as r:
+            nch, sr, n = r.getnchannels(), r.getframerate(), r.getnframes()
+            vals = struct.unpack(f"<{n * nch}h", r.readframes(n))
+        return [(doc_id, nch, sr, n, max(map(abs, vals), default=0), sum(vals))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k: [] for k in ("doc_id", "n_channels", "sample_rate",
-                                   "n_frames", "peak", "sample_sum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["data"]):
-                if payload is None or pd.isna(doc_id):
-                    continue
-                try:
-                    with wave.open(io.BytesIO(payload)) as r:
-                        nch, sr, n = (
-                            r.getnchannels(),
-                            r.getframerate(),
-                            r.getnframes(),
-                        )
-                        vals = struct.unpack(f"<{n * nch}h", r.readframes(n))
-                except (wave.Error, struct.error, EOFError):
-                    continue  # corrupt payload: contained, not fatal
-                out["doc_id"].append(int(doc_id))
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(sr)
-                out["n_frames"].append(n)
-                out["peak"].append(max(abs(v) for v in vals) if vals else 0)
-                out["sample_sum"].append(sum(vals))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(run, schema=WAV_DECODED_SCHEMA)
+    return map_rows(df.select("doc_id", "data"), decode, WAV_DECODED_SCHEMA, contain=True)
 
 
 #: two-tone synthesis parameters for the SPECTRAL tier: 64 samples (one
@@ -307,47 +323,28 @@ def _tone_bins(doc_id: int) -> tuple[int, int]:
 def synth_wav_tones(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, data) with REAL RIFF/WAVE PCM16 payloads carrying a
     two-tone test signal: round(A1·sin(2π·k1·i/64) + A2·sin(2π·k2·i/64)).
-    Same executor-side ``wave``-writer shape as synth_wav; int16 rounding
+    Same executor-side ``wave`` writer as synth_wav; int16 rounding
     injects at most 0.5 LSB of broadband noise (~2 units per FFT bin),
     four orders of magnitude under the tone magnitudes (A·N/2 = 256000),
     so the synthesized spectrum's top-2 ranking is exact, not merely
     probable."""
-    import io
     import math
-    import struct
-    import wave
 
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                k1, k2 = _tone_bins(int(doc_id))
-                s = [
-                    int(
-                        round(
-                            TONE_AMP_MAIN * math.sin(2 * math.pi * k1 * i / TONE_N_SAMPLES)
-                            + TONE_AMP_SECOND
-                            * math.sin(2 * math.pi * k2 * i / TONE_N_SAMPLES)
-                        )
+    def build(doc_id: int) -> bytes:
+        k1, k2 = _tone_bins(doc_id)
+        return _pcm16_wav(
+            [
+                int(
+                    round(
+                        TONE_AMP_MAIN * math.sin(2 * math.pi * k1 * i / TONE_N_SAMPLES)
+                        + TONE_AMP_SECOND * math.sin(2 * math.pi * k2 * i / TONE_N_SAMPLES)
                     )
-                    for i in range(TONE_N_SAMPLES)
-                ]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(WAV_SAMPLE_RATE)
-                    w.writeframes(struct.pack(f"<{len(s)}h", *s))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
+                )
+                for i in range(TONE_N_SAMPLES)
+            ]
+        )
 
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 SPECTRAL_SCHEMA = StructType(
@@ -377,10 +374,6 @@ def spectral_features(df: DataFrame) -> DataFrame:
     The whole batch FFTs as ONE vectorized numpy call when clip lengths
     agree (the synthesized-fixture fast path); ragged batches fall back to
     per-clip rfft."""
-    import io
-    import struct
-    import wave
-
     import numpy as np
 
     src = df.select("doc_id", "data")
@@ -396,9 +389,8 @@ def spectral_features(df: DataFrame) -> DataFrame:
             if not len(pdf):
                 continue
             ids, waves = [], []
+            pdf = pdf.dropna()  # a NULL id or payload yields no row
             for doc_id, payload in zip(pdf["doc_id"], pdf["data"]):
-                if payload is None or pd.isna(doc_id):
-                    continue
                 try:
                     with wave.open(io.BytesIO(payload)) as r:
                         if r.getnchannels() != 1 or r.getsampwidth() != 2:
@@ -453,49 +445,38 @@ def _bmp_pixel(doc_id: int, x: int, y: int, c: int) -> int:
     return (doc_id * 7 + y * 131 + x * 17 + c * 29) % 256
 
 
+def _bmp_bytes(w: int, h: int, rgb: Callable[[int, int], tuple[int, int, int]]) -> bytes:
+    """A genuine uncompressed 24-bit BMP of the ``w x h`` image whose
+    pixel ``(x, y)`` (y = 0 is the top row) is ``rgb(x, y) = (r, g, b)``:
+    canonical BITMAPFILEHEADER + BITMAPINFOHEADER, then bottom-up rows in
+    on-disk B, G, R order, each padded to 4 bytes. The one BMP writer of
+    the image tiers (synth, resize, dHash)."""
+    stride = ((w * 3 + 3) // 4) * 4
+    img_size = stride * h
+    rows = []
+    for y in range(h - 1, -1, -1):  # BMP rows are bottom-up
+        row = bytearray()
+        for x in range(w):
+            r, g, b = rgb(x, y)
+            row += bytes((b, g, r))
+        rows.append(bytes(row) + b"\x00" * (stride - w * 3))
+    head = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0)
+    return head + info + b"".join(rows)
+
+
 def synth_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, data) with REAL uncompressed 24-bit BMP payloads: a
-    canonical BITMAPFILEHEADER + BITMAPINFOHEADER and bottom-up BGR pixel
-    rows with the format's 4-byte row padding — built with stdlib
-    ``struct`` only, Arrow-batched on the executors. Pixels come from
+    """(doc_id, data) with REAL uncompressed 24-bit BMP payloads
+    (:func:`_bmp_bytes`), Arrow-batched on the executors. Pixels come from
     ``_bmp_pixel`` so decoding them is exactly checkable."""
-    import struct
 
-    src = df.select(F.col(id_col).alias("doc_id"))
+    def build(doc_id: int) -> bytes:
+        return _bmp_bytes(
+            *_bmp_dims(doc_id),
+            lambda x, y: tuple(_bmp_pixel(doc_id, x, y, c) for c in range(3)),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                w, h = _bmp_dims(doc_id)
-                stride = ((w * 3 + 3) // 4) * 4
-                img_size = stride * h
-                head = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54)
-                info = struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
-                )
-                rows = []
-                for y in range(h - 1, -1, -1):  # BMP rows are bottom-up
-                    row = bytearray()
-                    for x in range(w):
-                        row += bytes(
-                            (  # on-disk order is B, G, R
-                                _bmp_pixel(doc_id, x, y, 2),
-                                _bmp_pixel(doc_id, x, y, 1),
-                                _bmp_pixel(doc_id, x, y, 0),
-                            )
-                        )
-                    row += b"\x00" * (stride - len(row))
-                    rows.append(bytes(row))
-                payloads.append(head + info + b"".join(rows))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def _parse_bmp_header(raw: bytes):
@@ -507,8 +488,6 @@ def _parse_bmp_header(raw: bytes):
     resize and decode tiers silently diverge on what counts as corrupt
     (e.g. one later accepting top-down h<0 rows), so that resize could
     emit files its own downstream decoder rejects."""
-    import struct
-
     try:
         magic, _fsz, _r1, _r2, off = struct.unpack_from("<2sIHHI", raw, 0)
         hsz, w, h, planes, bpp = struct.unpack_from("<IiiHH", raw, 14)
@@ -522,6 +501,12 @@ def _parse_bmp_header(raw: bytes):
     return w, h, off, stride
 
 
+#: the output of every image decoder that pins pixel layout by a checksum
+IMAGE_DECODED_DDL = (
+    "doc_id long, width long, height long, pixel_sum long, weighted_sum long"
+)
+
+
 def decode_bmp(df: DataFrame) -> DataFrame:
     """REAL image decode: parses the BMP file + info headers (magic, data
     offset, dimensions, planes, bit depth) and walks the pixel array with
@@ -530,58 +515,30 @@ def decode_bmp(df: DataFrame) -> DataFrame:
     classic BMP-parsing bug, and it breaks the oracle hash here). Returns
     (doc_id, width, height, pixel_sum). Corrupt or NULL payloads yield no
     row (same containment contract as decode_wav)."""
-    import struct
 
-    src = df.select("doc_id", "data")
+    def decode(doc_id: int, raw: bytes):
+        parsed = _parse_bmp_header(raw)
+        if parsed is None:
+            return
+        w, h, off, stride = parsed
+        total = weighted = 0
+        for yrow in range(h):
+            base = off + yrow * stride
+            row = raw[base : base + w * 3]  # pad excluded
+            total += sum(row)
+            # layout-pinning checksum: a plain sum is invariant under both
+            # channel swap and vertical flip, so it cannot catch the two
+            # classic BMP misreads. The weights break both symmetries:
+            # channels R,G,B weigh 1,2,3 (on-disk order is B,G,R) and each
+            # IMAGE row y — file rows are bottom-up, so y = h-1-yrow —
+            # weighs (y+1)
+            y = h - 1 - yrow
+            for x in range(w):
+                b, g, r = row[x * 3], row[x * 3 + 1], row[x * 3 + 2]
+                weighted += (y + 1) * (1 * r + 2 * g + 3 * b)
+        yield doc_id, w, h, total, weighted
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "pixel_sum", "weighted_sum")
-            }
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                parsed = _parse_bmp_header(raw)
-                if parsed is None:
-                    continue
-                w, h, off, stride = parsed
-                try:
-                    total = weighted = 0
-                    for yrow in range(h):
-                        base = off + yrow * stride
-                        row = raw[base : base + w * 3]  # pad excluded
-                        total += sum(row)
-                        # layout-pinning checksum: a plain sum is invariant
-                        # under both channel swap and vertical flip, so it
-                        # cannot catch the two classic BMP misreads. The
-                        # weights break both symmetries: channels R,G,B
-                        # weigh 1,2,3 (on-disk order is B,G,R) and each
-                        # IMAGE row y — file rows are bottom-up, so
-                        # y = h-1-yrow — weighs (y+1)
-                        y = h - 1 - yrow
-                        for x in range(w):
-                            b, g, r = row[x * 3], row[x * 3 + 1], row[x * 3 + 2]
-                            weighted += (y + 1) * (1 * r + 2 * g + 3 * b)
-                except struct.error:
-                    continue
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["pixel_sum"].append(total)
-                out["weighted_sum"].append(weighted)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, pixel_sum long, "
-        "weighted_sum long",
-    )
+    return map_rows(df.select("doc_id", "data"), decode, IMAGE_DECODED_DDL, contain=True)
 
 
 def resize_bmp(df: DataFrame, factor: int = 2) -> DataFrame:
@@ -602,66 +559,39 @@ def resize_bmp(df: DataFrame, factor: int = 2) -> DataFrame:
     executors; at 100 TB this is the thumbnail/downsample pass of a
     multimodal ingest pipeline — one narrow mapInPandas over the binary
     column, no shuffle, output strictly smaller than input."""
-    import struct
-
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
-    src = df.select("doc_id", "data")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_ids, out_payloads = [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                parsed = _parse_bmp_header(raw)
-                if parsed is None:
-                    continue
-                w, h, off, stride = parsed
-                try:
-                    rw, rh = w // factor, h // factor
-                    if rw < 1 or rh < 1:
-                        continue
-                    # image-order rows (y=0 is top): file rows are bottom-up
-                    img = [
-                        raw[off + (h - 1 - y) * stride : off + (h - 1 - y) * stride + w * 3]
-                        for y in range(h)
-                    ]
+    def resize(doc_id: int, raw: bytes):
+        parsed = _parse_bmp_header(raw)
+        if parsed is None:
+            return
+        w, h, off, stride = parsed
+        rw, rh = w // factor, h // factor
+        if rw < 1 or rh < 1:
+            return
+        # image-order rows (y=0 is top): file rows are bottom-up
+        img = [
+            raw[off + (h - 1 - y) * stride : off + (h - 1 - y) * stride + w * 3]
+            for y in range(h)
+        ]
 
-                    def pooled(X: int, Y: int, ch: int) -> int:
-                        s = 0
-                        for dy in range(factor):
-                            row = img[Y * factor + dy]
-                            for dx in range(factor):
-                                s += row[(X * factor + dx) * 3 + ch]
-                        return s // (factor * factor)
+        def pooled(X: int, Y: int, ch: int) -> int:
+            # ch is the on-disk channel index: 0, 1, 2 = B, G, R
+            s = 0
+            for dy in range(factor):
+                row = img[Y * factor + dy]
+                for dx in range(factor):
+                    s += row[(X * factor + dx) * 3 + ch]
+            return s // (factor * factor)
 
-                    rstride = ((rw * 3 + 3) // 4) * 4
-                    img_size = rstride * rh
-                    head = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54)
-                    info = struct.pack(
-                        "<IiiHHIIiiII", 40, rw, rh, 1, 24, 0, img_size, 2835, 2835, 0, 0
-                    )
-                    rows = []
-                    for Y in range(rh - 1, -1, -1):  # write bottom-up
-                        row = bytearray()
-                        for X in range(rw):
-                            row += bytes(
-                                (pooled(X, Y, 0), pooled(X, Y, 1), pooled(X, Y, 2))
-                            )
-                        row += b"\x00" * (rstride - len(row))
-                        rows.append(bytes(row))
-                except (struct.error, IndexError):
-                    continue
-                out_ids.append(int(doc_id))
-                out_payloads.append(head + info + b"".join(rows))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(out_ids, dtype="int64"), "data": out_payloads}
-            )
+        yield doc_id, _bmp_bytes(
+            rw, rh, lambda X, Y: (pooled(X, Y, 2), pooled(X, Y, 1), pooled(X, Y, 0))
+        )
 
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return map_rows(
+        df.select("doc_id", "data"), resize, "doc_id long, data binary", contain=True
+    )
 
 
 def _avi_frames(doc_id: int) -> list[bytes]:
@@ -682,49 +612,33 @@ def synth_avi(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     raw '00db' frame chunks — stdlib struct only, Arrow-batched. This is
     the same RIFF chunk grammar WAV uses, exercised one level deeper
     (nested LISTs + per-chunk even-byte padding)."""
-    import struct
 
-    src = df.select(F.col(id_col).alias("doc_id"))
+    def chunk(fourcc: bytes, data: bytes) -> bytes:
+        pad = b"\x00" if len(data) % 2 else b""
+        return fourcc + struct.pack("<I", len(data)) + data + pad
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                frs = _avi_frames(doc_id)
+    def lst(listtype: bytes, payload: bytes) -> bytes:
+        return chunk(b"LIST", listtype + payload)
 
-                def chunk(fourcc: bytes, data: bytes) -> bytes:
-                    pad = b"\x00" if len(data) % 2 else b""
-                    return fourcc + struct.pack("<I", len(data)) + data + pad
+    def build(doc_id: int) -> bytes:
+        frs = _avi_frames(doc_id)
+        w, h = 8, 6
+        avih = struct.pack("<14I", 40000, 0, 0, 0x10, len(frs), 0, 1, 0, w, h, 0, 0, 0, 0)
+        strh = struct.pack(
+            "<4s4sIHHIIIIIIIIhhhh",
+            b"vids", b"DIB ", 0, 0, 0, 0, 25, 1000, 0, len(frs),
+            0, 0, 0, 0, 0, 0, 0,
+        )
+        strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, w * h * 3, 0, 0, 0, 0)
+        hdrl = lst(
+            b"hdrl",
+            chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
+        )
+        movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in frs))
+        body = b"AVI " + hdrl + movi
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-                def lst(listtype: bytes, payload: bytes) -> bytes:
-                    return chunk(b"LIST", listtype + payload)
-
-                w, h = 8, 6
-                avih = struct.pack(
-                    "<14I", 40000, 0, 0, 0x10, len(frs), 0, 1, 0, w, h, 0, 0, 0, 0
-                )
-                strh = struct.pack(
-                    "<4s4sIHHIIIIIIIIhhhh",
-                    b"vids", b"DIB ", 0, 0, 0, 0, 25, 1000, 0, len(frs),
-                    0, 0, 0, 0, 0, 0, 0,
-                )
-                strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, w * h * 3, 0, 0, 0, 0)
-                hdrl = lst(
-                    b"hdrl",
-                    chunk(b"avih", avih)
-                    + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-                )
-                movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in frs))
-                body = b"AVI " + hdrl + movi
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def extract_avi_frames(df: DataFrame) -> DataFrame:
@@ -737,68 +651,42 @@ def extract_avi_frames(df: DataFrame) -> DataFrame:
     frame lengths make fatal. Corrupt or NULL payloads yield no rows
     (decode_wav's containment contract). This upgrades sample_frames'
     byte-slicing stand-in: the container grammar here is the real one."""
-    import struct
 
-    src = df.select("doc_id", "data")
+    def extract(doc_id: int, raw: bytes):
+        if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
+            return
+        riff_end = 8 + struct.unpack_from("<I", raw, 4)[0]
+        if riff_end > len(raw):
+            return  # truncated container
+        header_frames = -1
+        frames: list[bytes] = []
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k: [] for k in ("doc_id", "frame_id", "n_bytes",
-                                   "byte_sum", "header_frames")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                try:
-                    if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-                        continue
-                    riff_end = 8 + struct.unpack_from("<I", raw, 4)[0]
-                    if riff_end > len(raw):
-                        continue  # truncated container
-                    header_frames = -1
-                    frames: list[bytes] = []
+        def walk(pos: int, end: int, in_movi: bool) -> None:
+            nonlocal header_frames
+            while pos + 8 <= end:
+                fourcc = raw[pos : pos + 4]
+                size = struct.unpack_from("<I", raw, pos + 4)[0]
+                data_start = pos + 8
+                if data_start + size > end:
+                    raise ValueError("chunk overruns container")
+                if fourcc == b"LIST":
+                    ltype = raw[data_start : data_start + 4]
+                    walk(data_start + 4, data_start + size, ltype == b"movi")
+                elif fourcc == b"avih":
+                    header_frames = struct.unpack_from("<I", raw, data_start + 16)[0]
+                elif in_movi and fourcc == b"00db":
+                    frames.append(raw[data_start : data_start + size])
+                pos = data_start + size + (size % 2)  # RIFF pad
 
-                    def walk(pos: int, end: int, in_movi: bool) -> None:
-                        nonlocal header_frames
-                        while pos + 8 <= end:
-                            fourcc = raw[pos : pos + 4]
-                            size = struct.unpack_from("<I", raw, pos + 4)[0]
-                            data_start = pos + 8
-                            if data_start + size > end:
-                                raise ValueError("chunk overruns container")
-                            if fourcc == b"LIST":
-                                ltype = raw[data_start : data_start + 4]
-                                walk(
-                                    data_start + 4,
-                                    data_start + size,
-                                    ltype == b"movi",
-                                )
-                            elif fourcc == b"avih":
-                                header_frames = struct.unpack_from(
-                                    "<I", raw, data_start + 16
-                                )[0]
-                            elif in_movi and fourcc == b"00db":
-                                frames.append(raw[data_start : data_start + size])
-                            pos = data_start + size + (size % 2)  # RIFF pad
+        walk(12, riff_end, False)
+        for k, fr in enumerate(frames):
+            yield doc_id, k, len(fr), sum(fr), header_frames
 
-                    walk(12, riff_end, False)
-                except (struct.error, ValueError, IndexError):
-                    continue
-                for k, fr in enumerate(frames):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_id"].append(k)
-                    out["n_bytes"].append(len(fr))
-                    out["byte_sum"].append(sum(fr))
-                    out["header_frames"].append(header_frames)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, frame_id long, n_bytes long, byte_sum long, "
-        "header_frames long",
+    return map_rows(
+        df.select("doc_id", "data"),
+        extract,
+        "doc_id long, frame_id long, n_bytes long, byte_sum long, header_frames long",
+        contain=True,
     )
 
 
@@ -839,10 +727,6 @@ def synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the zlib stream is deliberately split across TWO IDAT chunks at an
     odd offset, making the decoder's IDAT concatenation load-bearing.
     Built with stdlib struct+zlib only, Arrow-batched on executors."""
-    import struct
-    import zlib
-
-    src = df.select(F.col(id_col).alias("doc_id"))
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
         return (
@@ -852,56 +736,43 @@ def synth_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                w, h = _png_dims(doc_id)
-                bpp = 3
-                raw = bytearray()
-                prev = bytes(w * bpp)
-                for y in range(h):
-                    row = bytes(
-                        _png_pixel(doc_id, x, y, c)
-                        for x in range(w)
-                        for c in range(3)
-                    )
-                    ftype = (y + doc_id) % 5
-                    raw.append(ftype)
-                    for i in range(len(row)):
-                        left = row[i - bpp] if i >= bpp else 0
-                        up = prev[i]
-                        ul = prev[i - bpp] if i >= bpp else 0
-                        if ftype == 0:
-                            f = row[i]
-                        elif ftype == 1:
-                            f = row[i] - left
-                        elif ftype == 2:
-                            f = row[i] - up
-                        elif ftype == 3:
-                            f = row[i] - ((left + up) >> 1)
-                        else:
-                            f = row[i] - _paeth(left, up, ul)
-                        raw.append(f & 0xFF)
-                    prev = row
-                z = zlib.compress(bytes(raw), 6)
-                cut = min(5, len(z) - 1) or 1  # odd split -> 2 IDAT chunks
-                ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", z[:cut])
-                    + chunk(b"IDAT", z[cut:])
-                    + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
+    def build(doc_id: int) -> bytes:
+        w, h = _png_dims(doc_id)
+        bpp = 3
+        raw = bytearray()
+        prev = bytes(w * bpp)
+        for y in range(h):
+            row = bytes(_png_pixel(doc_id, x, y, c) for x in range(w) for c in range(3))
+            ftype = (y + doc_id) % 5
+            raw.append(ftype)
+            for i in range(len(row)):
+                left = row[i - bpp] if i >= bpp else 0
+                up = prev[i]
+                ul = prev[i - bpp] if i >= bpp else 0
+                if ftype == 0:
+                    f = row[i]
+                elif ftype == 1:
+                    f = row[i] - left
+                elif ftype == 2:
+                    f = row[i] - up
+                elif ftype == 3:
+                    f = row[i] - ((left + up) >> 1)
+                else:
+                    f = row[i] - _paeth(left, up, ul)
+                raw.append(f & 0xFF)
+            prev = row
+        z = zlib.compress(bytes(raw), 6)
+        cut = min(5, len(z) - 1) or 1  # odd split -> 2 IDAT chunks
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", z[:cut])
+            + chunk(b"IDAT", z[cut:])
+            + chunk(b"IEND", b"")
+        )
 
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def decode_png(df: DataFrame) -> DataFrame:
@@ -916,96 +787,64 @@ def decode_png(df: DataFrame) -> DataFrame:
     skips filter reconstruction or mis-concatenates IDAT breaks BOTH
     sums). Corrupt payloads (bad magic, CRC mismatch, truncated DEFLATE
     stream, bad IHDR) yield no row."""
-    import struct
-    import zlib
 
-    src = df.select("doc_id", "data")
+    def decode(doc_id: int, raw: bytes):
+        if raw[:8] != b"\x89PNG\r\n\x1a\n":
+            return
+        pos, ihdr, idat = 8, None, b""
+        while pos + 8 <= len(raw):
+            (ln,) = struct.unpack_from(">I", raw, pos)
+            ctype = raw[pos + 4 : pos + 8]
+            data = raw[pos + 8 : pos + 8 + ln]
+            if len(data) != ln or pos + 12 + ln > len(raw):
+                return
+            (crc,) = struct.unpack_from(">I", raw, pos + 8 + ln)
+            if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
+                return
+            if ctype == b"IHDR":
+                ihdr = data
+            elif ctype == b"IDAT":
+                idat += data
+            elif ctype == b"IEND":
+                break
+            pos += 12 + ln
+        if ihdr is None or len(ihdr) != 13:
+            return
+        w, h, depth, ctype_, comp, filt, inter = struct.unpack(">IIBBBBB", ihdr)
+        if depth != 8 or ctype_ != 2 or comp or filt or inter:
+            return
+        bpp = 3
+        stream = zlib.decompress(idat)
+        if len(stream) != h * (1 + w * bpp):
+            return
+        total = weighted = 0
+        prev = bytearray(w * bpp)
+        for y in range(h):
+            base = y * (1 + w * bpp)
+            ftype = stream[base]
+            row = bytearray(stream[base + 1 : base + 1 + w * bpp])
+            for i in range(len(row)):
+                left = row[i - bpp] if i >= bpp else 0
+                up = prev[i]
+                ul = prev[i - bpp] if i >= bpp else 0
+                if ftype == 1:
+                    row[i] = (row[i] + left) & 0xFF
+                elif ftype == 2:
+                    row[i] = (row[i] + up) & 0xFF
+                elif ftype == 3:
+                    row[i] = (row[i] + ((left + up) >> 1)) & 0xFF
+                elif ftype == 4:
+                    row[i] = (row[i] + _paeth(left, up, ul)) & 0xFF
+                elif ftype != 0:
+                    raise ValueError("bad filter type")
+            total += sum(row)
+            for x in range(w):
+                for c in range(3):
+                    weighted += (y + 1) * (c + 1) * row[x * bpp + c]
+            prev = row
+        yield doc_id, w, h, total, weighted
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "pixel_sum", "weighted_sum")
-            }
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                try:
-                    if bytes(raw[:8]) != b"\x89PNG\r\n\x1a\n":
-                        continue
-                    pos, ihdr, idat, ok = 8, None, b"", True
-                    while pos + 8 <= len(raw):
-                        (ln,) = struct.unpack_from(">I", raw, pos)
-                        ctype = bytes(raw[pos + 4 : pos + 8])
-                        data = bytes(raw[pos + 8 : pos + 8 + ln])
-                        if len(data) != ln or pos + 12 + ln > len(raw):
-                            ok = False
-                            break
-                        (crc,) = struct.unpack_from(">I", raw, pos + 8 + ln)
-                        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                            ok = False
-                            break
-                        if ctype == b"IHDR":
-                            ihdr = data
-                        elif ctype == b"IDAT":
-                            idat += data
-                        elif ctype == b"IEND":
-                            break
-                        pos += 12 + ln
-                    if not ok or ihdr is None or len(ihdr) != 13:
-                        continue
-                    w, h, depth, ctype_, comp, filt, inter = struct.unpack(
-                        ">IIBBBBB", ihdr
-                    )
-                    if depth != 8 or ctype_ != 2 or comp or filt or inter:
-                        continue
-                    bpp = 3
-                    stream = zlib.decompress(idat)
-                    if len(stream) != h * (1 + w * bpp):
-                        continue
-                    total = weighted = 0
-                    prev = bytearray(w * bpp)
-                    for y in range(h):
-                        base = y * (1 + w * bpp)
-                        ftype = stream[base]
-                        row = bytearray(stream[base + 1 : base + 1 + w * bpp])
-                        for i in range(len(row)):
-                            left = row[i - bpp] if i >= bpp else 0
-                            up = prev[i]
-                            ul = prev[i - bpp] if i >= bpp else 0
-                            if ftype == 1:
-                                row[i] = (row[i] + left) & 0xFF
-                            elif ftype == 2:
-                                row[i] = (row[i] + up) & 0xFF
-                            elif ftype == 3:
-                                row[i] = (row[i] + ((left + up) >> 1)) & 0xFF
-                            elif ftype == 4:
-                                row[i] = (row[i] + _paeth(left, up, ul)) & 0xFF
-                            elif ftype != 0:
-                                raise ValueError("bad filter type")
-                        total += sum(row)
-                        for x in range(w):
-                            for c in range(3):
-                                weighted += (y + 1) * (c + 1) * row[x * bpp + c]
-                        prev = row
-                except (struct.error, zlib.error, ValueError):
-                    continue
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["pixel_sum"].append(total)
-                out["weighted_sum"].append(weighted)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, pixel_sum long, "
-        "weighted_sum long",
-    )
+    return map_rows(df.select("doc_id", "data"), decode, IMAGE_DECODED_DDL, contain=True)
 
 
 # -- JPEG: the DCT image tier, real codec (functions/jpeg.py) -----------------
@@ -1035,30 +874,26 @@ def synth_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     forward DCT + quantization + zigzag + DC-diff entropy coding with
     0xFF byte stuffing (functions/jpeg.encode_gray_jpeg, stdlib+numpy
     only). Pixels are constant per 8x8 block from ``_jpeg_block_val``."""
+    return _synth_gray_jpeg(
+        df, id_col, lambda doc_id, x, y: _jpeg_block_val(doc_id, x // 8, y // 8)
+    )
+
+
+def _synth_gray_jpeg(
+    df: DataFrame, id_col: str, pixel: Callable[[int, int, int], int]
+) -> DataFrame:
+    """(doc_id, data): one baseline gray JPEG per doc over the
+    ``_jpeg_blocks`` grid, pixel ``(x, y)`` = ``pixel(doc_id, x, y)``."""
     from .jpeg import encode_gray_jpeg
 
-    src = df.select(F.col(id_col).alias("doc_id"))
+    def build(doc_id: int) -> bytes:
+        wb, hb = _jpeg_blocks(doc_id)
+        w, h = wb * 8, hb * 8
+        return encode_gray_jpeg(
+            [pixel(doc_id, x, y) for y in range(h) for x in range(w)], w, h
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                wb, hb = _jpeg_blocks(doc_id)
-                w, h = wb * 8, hb * 8
-                px = [
-                    _jpeg_block_val(doc_id, x // 8, y // 8)
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(encode_gray_jpeg(px, w, h))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def decode_jpeg(df: DataFrame) -> DataFrame:
@@ -1072,47 +907,14 @@ def decode_jpeg(df: DataFrame) -> DataFrame:
     (decode one block's DC wrong and every later block shifts). Corrupt
     payloads yield no row (same containment contract as the other
     decoders)."""
-    import struct
-
     from .jpeg import decode_gray_jpeg
 
-    src = df.select("doc_id", "data")
+    def decode(doc_id: int, raw: bytes):
+        w, h, px = decode_gray_jpeg(raw)
+        weighted = sum((y + 1) * (x + 1) * px[y * w + x] for y in range(h) for x in range(w))
+        return [(doc_id, w, h, sum(px), weighted)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "pixel_sum", "weighted_sum")
-            }
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                try:
-                    w, h, px = decode_gray_jpeg(bytes(raw))
-                except (ValueError, IndexError, struct.error):
-                    continue
-                total = sum(px)
-                weighted = sum(
-                    (y + 1) * (x + 1) * px[y * w + x]
-                    for y in range(h)
-                    for x in range(w)
-                )
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["pixel_sum"].append(total)
-                out["weighted_sum"].append(weighted)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, pixel_sum long, "
-        "weighted_sum long",
-    )
+    return map_rows(df.select("doc_id", "data"), decode, IMAGE_DECODED_DDL, contain=True)
 
 
 #: Integer per-pixel error gate for the separable-ramp JPEG family:
@@ -1144,30 +946,7 @@ def synth_jpeg_ramp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     coefficient in row 0 / column 0 of each block is live and the
     encode is lossy: this is the corpus-like regime the exact-hash
     oracle cannot cover."""
-    from .jpeg import encode_gray_jpeg
-
-    src = df.select(F.col(id_col).alias("doc_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                wb, hb = _jpeg_blocks(doc_id)
-                w, h = wb * 8, hb * 8
-                px = [
-                    _jpeg_ramp_val(doc_id, x, y)
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(encode_gray_jpeg(px, w, h))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth_gray_jpeg(df, id_col, _jpeg_ramp_val)
 
 
 def decode_jpeg_tolerance(df: DataFrame) -> DataFrame:
@@ -1185,7 +964,6 @@ def decode_jpeg_tolerance(df: DataFrame) -> DataFrame:
     containment contract as every decoder); a payload decoding to the
     wrong image trips within_bound, pytest-pinned."""
     import math
-    import struct
 
     from .jpeg import decode_gray_jpeg, separable_ramp_err_bound
 
@@ -1195,60 +973,21 @@ def decode_jpeg_tolerance(df: DataFrame) -> DataFrame:
             f"{JPEG_RAMP_ERR_BOUND}, derived "
             f"{separable_ramp_err_bound():.6f} (+0.5, floored)"
         )
-    src = df.select("doc_id", "data")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "orig_pixel_sum",
-                    "err_bound", "within_bound",
-                )
-            }
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                try:
-                    w, h, px = decode_gray_jpeg(bytes(raw))
-                except (ValueError, IndexError, struct.error):
-                    continue
-                doc_id = int(doc_id)
-                ref = [
-                    _jpeg_ramp_val(doc_id, x, y)
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                max_err = max(
-                    (abs(a - b) for a, b in zip(px, ref)), default=0
-                )
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["orig_pixel_sum"].append(sum(ref))
-                out["err_bound"].append(JPEG_RAMP_ERR_BOUND)
-                out["within_bound"].append(max_err <= JPEG_RAMP_ERR_BOUND)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="int64"),
-                    "height": pd.Series(out["height"], dtype="int64"),
-                    "orig_pixel_sum": pd.Series(
-                        out["orig_pixel_sum"], dtype="int64"
-                    ),
-                    "err_bound": pd.Series(out["err_bound"], dtype="int64"),
-                    "within_bound": pd.Series(
-                        out["within_bound"], dtype="bool"
-                    ),
-                }
-            )
+    def decode(doc_id: int, raw: bytes):
+        w, h, px = decode_gray_jpeg(raw)
+        ref = [_jpeg_ramp_val(doc_id, x, y) for y in range(h) for x in range(w)]
+        max_err = max((abs(a - b) for a, b in zip(px, ref)), default=0)
+        return [
+            (doc_id, w, h, sum(ref), JPEG_RAMP_ERR_BOUND, max_err <= JPEG_RAMP_ERR_BOUND)
+        ]
 
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, orig_pixel_sum long, "
+    return map_rows(
+        df.select("doc_id", "data"),
+        decode,
+        "doc_id long, width long, height long, orig_pixel_sum long, "
         "err_bound long, within_bound boolean",
+        contain=True,
     )
 
 
@@ -1434,46 +1173,28 @@ def synth_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     fourth doc carries a Graphic Control Extension before the image —
     so the decoder's reset and extension-skip paths are load-bearing on
     the real corpus. Built with stdlib struct only, Arrow-batched."""
-    import struct
+    gct = bytes(_gif_palette_val(i, c) for i in range(256) for c in range(3))
 
-    src = df.select(F.col(id_col).alias("doc_id"))
-    gct = bytes(
-        _gif_palette_val(i, c) for i in range(256) for c in range(3)
-    )
+    def build(doc_id: int) -> bytes:
+        w, h = _gif_dims(doc_id)
+        indices = bytes(_gif_index(doc_id, x, y) for y in range(h) for x in range(w))
+        lzw = _lzw_encode(indices, 8, clear_every=16 if doc_id % 3 == 0 else None)
+        parts = [
+            b"GIF89a",
+            # packed 0xF7: GCT present, color res 7, 2^(7+1) entries
+            struct.pack("<HHBBB", w, h, 0xF7, 0, 0),
+            gct,
+        ]
+        if doc_id % 4 == 0:
+            parts.append(b"\x21\xf9\x04\x00\x00\x00\x00\x00")
+        parts += [
+            b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0),
+            b"\x08" + _gif_subblocks(lzw),
+            b"\x3b",
+        ]
+        return b"".join(parts)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                w, h = _gif_dims(doc_id)
-                indices = bytes(
-                    _gif_index(doc_id, x, y) for y in range(h) for x in range(w)
-                )
-                lzw = _lzw_encode(
-                    indices, 8, clear_every=16 if doc_id % 3 == 0 else None
-                )
-                parts = [
-                    b"GIF89a",
-                    # packed 0xF7: GCT present, color res 7, 2^(7+1) entries
-                    struct.pack("<HHBBB", w, h, 0xF7, 0, 0),
-                    gct,
-                ]
-                if doc_id % 4 == 0:
-                    parts.append(b"\x21\xf9\x04\x00\x00\x00\x00\x00")
-                parts += [
-                    b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0),
-                    b"\x08" + _gif_subblocks(lzw),
-                    b"\x3b",
-                ]
-                payloads.append(b"".join(parts))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def decode_gif(df: DataFrame) -> DataFrame:
@@ -1488,11 +1209,8 @@ def decode_gif(df: DataFrame) -> DataFrame:
     magic, missing global color table, truncated sub-blocks, corrupt
     LZW streams, wrong pixel count, interlaced or local-palette images
     this decoder does not claim) yield no row."""
-    import struct
 
-    src = df.select("doc_id", "data")
-
-    def decode_one(raw: bytes) -> tuple[int, int, int, int]:
+    def decode(doc_id: int, raw: bytes):
         if raw[:6] not in (b"GIF87a", b"GIF89a"):
             raise ValueError("gif: bad signature")
         w0, h0, packed, _bg, _ar = struct.unpack_from("<HHBBB", raw, 6)
@@ -1500,7 +1218,7 @@ def decode_gif(df: DataFrame) -> DataFrame:
             raise ValueError("gif: no global color table")
         gct_n = 2 << (packed & 0x07)
         pos = 13
-        gct = bytes(raw[pos : pos + 3 * gct_n])
+        gct = raw[pos : pos + 3 * gct_n]
         if len(gct) != 3 * gct_n:
             raise ValueError("gif: truncated color table")
         pos += 3 * gct_n
@@ -1558,37 +1276,9 @@ def decode_gif(df: DataFrame) -> DataFrame:
                     v = gct[idx * 3 + c]
                     total += v
                     weighted += (y + 1) * (c + 1) * v
-        return w, h, total, weighted
+        return [(doc_id, w, h, total, weighted)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {
-                k: []
-                for k in ("doc_id", "width", "height", "pixel_sum", "weighted_sum")
-            }
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                try:
-                    w, h, total, weighted = decode_one(bytes(raw))
-                except (ValueError, IndexError, struct.error):
-                    continue
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["pixel_sum"].append(total)
-                out["weighted_sum"].append(weighted)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, width long, height long, pixel_sum long, "
-        "weighted_sum long",
-    )
+    return map_rows(df.select("doc_id", "data"), decode, IMAGE_DECODED_DDL, contain=True)
 
 
 # -- MP4: the ISO BMFF container tier, real box walk --------------------------
@@ -1625,9 +1315,6 @@ def synth_mp4(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     one-chunk table would let a parser skip stsc resolution entirely),
     per-sample stsz, and absolute-offset stco. stdlib struct only,
     Arrow-batched."""
-    import struct
-
-    src = df.select(F.col(id_col).alias("doc_id"))
 
     def box(fourcc: bytes, payload: bytes) -> bytes:
         return struct.pack(">I", 8 + len(payload)) + fourcc + payload
@@ -1635,61 +1322,44 @@ def synth_mp4(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def full(fourcc: bytes, payload: bytes, version: int = 0) -> bytes:
         return box(fourcc, struct.pack(">I", version << 24) + payload)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for raw_id in pdf["doc_id"]:
-                doc_id = int(raw_id)
-                samples = _mp4_samples(doc_id)
-                n = len(samples)
-                body = b"".join(samples)
-                ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isommp42")
-                if doc_id % 2 == 0:  # largesize escape: size=1 + u64
-                    mdat = (
-                        struct.pack(">I", 1)
-                        + b"mdat"
-                        + struct.pack(">Q", 16 + len(body))
-                        + body
-                    )
-                    data_at = len(ftyp) + 16
-                else:
-                    mdat = box(b"mdat", body)
-                    data_at = len(ftyp) + 8
-                chunk2_at = data_at + sum(len(s) for s in samples[:2])
-                stsd = full(
-                    b"stsd",
-                    struct.pack(">I", 1)
-                    + box(b"raw ", struct.pack(">6xH", 1) + bytes(8)),
-                )
-                stts = full(b"stts", struct.pack(">III", 1, n, 40))
-                stsc = full(
-                    b"stsc",
-                    struct.pack(">I", 2)
-                    + struct.pack(">III", 1, 2, 1)       # chunk 1: 2 samples
-                    + struct.pack(">III", 2, n - 2, 1),  # chunk 2: the rest
-                )
-                stsz = full(
-                    b"stsz",
-                    struct.pack(">II", 0, n)
-                    + b"".join(struct.pack(">I", len(s)) for s in samples),
-                )
-                stco = full(b"stco", struct.pack(">III", 2, data_at, chunk2_at))
-                stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-                minf = box(b"minf", stbl)
-                hdlr = full(b"hdlr", bytes(4) + b"vide" + bytes(12) + b"v\x00")
-                mdhd = full(b"mdhd", struct.pack(">IIIIHH", 0, 0, 1000, 40 * n, 0x55C4, 0))
-                mdia = box(b"mdia", mdhd + hdlr + minf)
-                tkhd = full(b"tkhd", struct.pack(">III", 0, 0, 1) + bytes(68))
-                mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, 1000, 40 * n) + bytes(80))
-                moov = box(b"moov", mvhd + box(b"trak", tkhd + mdia))
-                payloads.append(ftyp + mdat + moov)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
+    def build(doc_id: int) -> bytes:
+        samples = _mp4_samples(doc_id)
+        n = len(samples)
+        body = b"".join(samples)
+        ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isommp42")
+        if doc_id % 2 == 0:  # largesize escape: size=1 + u64
+            mdat = struct.pack(">I", 1) + b"mdat" + struct.pack(">Q", 16 + len(body)) + body
+            data_at = len(ftyp) + 16
+        else:
+            mdat = box(b"mdat", body)
+            data_at = len(ftyp) + 8
+        chunk2_at = data_at + sum(len(s) for s in samples[:2])
+        stsd = full(
+            b"stsd", struct.pack(">I", 1) + box(b"raw ", struct.pack(">6xH", 1) + bytes(8))
+        )
+        stts = full(b"stts", struct.pack(">III", 1, n, 40))
+        stsc = full(
+            b"stsc",
+            struct.pack(">I", 2)
+            + struct.pack(">III", 1, 2, 1)  # chunk 1: 2 samples
+            + struct.pack(">III", 2, n - 2, 1),  # chunk 2: the rest
+        )
+        stsz = full(
+            b"stsz",
+            struct.pack(">II", 0, n) + b"".join(struct.pack(">I", len(s)) for s in samples),
+        )
+        stco = full(b"stco", struct.pack(">III", 2, data_at, chunk2_at))
+        stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
+        minf = box(b"minf", stbl)
+        hdlr = full(b"hdlr", bytes(4) + b"vide" + bytes(12) + b"v\x00")
+        mdhd = full(b"mdhd", struct.pack(">IIIIHH", 0, 0, 1000, 40 * n, 0x55C4, 0))
+        mdia = box(b"mdia", mdhd + hdlr + minf)
+        tkhd = full(b"tkhd", struct.pack(">III", 0, 0, 1) + bytes(68))
+        mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, 1000, 40 * n) + bytes(80))
+        moov = box(b"moov", mvhd + box(b"trak", tkhd + mdia))
+        return ftyp + mdat + moov
 
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def extract_mp4_samples(df: DataFrame) -> DataFrame:
@@ -1705,12 +1375,10 @@ def extract_mp4_samples(df: DataFrame) -> DataFrame:
     which the oracle's closed-form byte sums make fatal. Corrupt or NULL
     payloads (bad magic, truncated boxes, offsets past EOF, table count
     mismatches) yield no rows — the shared containment contract."""
-    import struct
 
-    src = df.select("doc_id", "data")
-
-    def demux(raw: bytes) -> tuple[list[tuple[int, int]], int]:
-        """Return ([(offset, size)] per sample, stsz count)."""
+    def demux(doc_id: int, raw: bytes):
+        """One (doc_id, sample_id, n_bytes, byte_sum, header_samples) row
+        per sample, resolved through the sample table."""
         tables: dict[bytes, bytes] = {}
 
         if len(raw) < 12 or raw[4:8] != b"ftyp":
@@ -1726,7 +1394,7 @@ def extract_mp4_samples(df: DataFrame) -> DataFrame:
                 if pos + 8 > end:
                     raise ValueError("mp4: truncated box header")
                 (size,) = struct.unpack_from(">I", raw, pos)
-                fourcc = bytes(raw[pos + 4 : pos + 8])
+                fourcc = raw[pos + 4 : pos + 8]
                 data_at = pos + 8
                 if size == 1:
                     if pos + 16 > end:
@@ -1741,7 +1409,7 @@ def extract_mp4_samples(df: DataFrame) -> DataFrame:
                     pos = data_at
                     continue
                 if fourcc in (b"stsz", b"stsc", b"stco"):
-                    tables[fourcc] = bytes(raw[data_at : pos + size])
+                    tables[fourcc] = raw[data_at : pos + size]
                 pos += size
 
         missing = {b"stsz", b"stsc", b"stco"} - set(tables)
@@ -1790,33 +1458,11 @@ def extract_mp4_samples(df: DataFrame) -> DataFrame:
                 s += 1
         if s != n:
             raise ValueError("mp4: sample count mismatch")
-        return spans, n
+        return [(doc_id, k, sz, sum(raw[at : at + sz]), n) for k, (at, sz) in enumerate(spans)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {k: [] for k in ("doc_id", "sample_id", "n_bytes",
-                                   "byte_sum", "header_samples")}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["data"]):
-                if raw is None or pd.isna(doc_id):
-                    continue
-                try:
-                    spans, n = demux(bytes(raw))
-                except (ValueError, IndexError, struct.error):
-                    continue
-                for k, (at, sz) in enumerate(spans):
-                    out["doc_id"].append(int(doc_id))
-                    out["sample_id"].append(k)
-                    out["n_bytes"].append(sz)
-                    out["byte_sum"].append(sum(raw[at : at + sz]))
-                    out["header_samples"].append(n)
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in out.items()}
-            )
-
-    return src.mapInPandas(
-        run,
-        schema="doc_id long, sample_id long, n_bytes long, byte_sum long, "
-        "header_samples long",
+    return map_rows(
+        df.select("doc_id", "data"),
+        demux,
+        "doc_id long, sample_id long, n_bytes long, byte_sum long, header_samples long",
+        contain=True,
     )

@@ -29,7 +29,8 @@ import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .multimodal import _synth
 
 NPY_MAGIC = b"\x93NUMPY"
 NPY_COLS = 8
@@ -53,32 +54,19 @@ def synth_npy(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     import io
 
     import numpy as np
-    import pandas as pd
 
-    src = df.select(F.col(id_col).alias("doc_id"))
+    def build(i: int) -> bytes:
+        nr, nc = _npy_dims(i)
+        m = np.array(
+            [[_npy_val(i, r, c) for c in range(nc)] for r in range(nr)], dtype=np.float32
+        )
+        if i % 3 == 0:
+            m = np.asfortranarray(m)
+        buf = io.BytesIO()
+        np.save(buf, m)
+        return buf.getvalue()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                nr, nc = _npy_dims(i)
-                m = np.array(
-                    [[_npy_val(i, r, c) for c in range(nc)] for r in range(nr)],
-                    dtype=np.float32,
-                )
-                if i % 3 == 0:
-                    m = np.asfortranarray(m)
-                buf = io.BytesIO()
-                np.save(buf, m)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="doc_id long, data binary")
+    return _synth(df, id_col, build)
 
 
 def _parse_npy(raw: bytes, descr: str = "<f4", ndim: int = 2):
@@ -194,31 +182,19 @@ def synth_npz(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     import io
 
     import numpy as np
-    import pandas as pd
 
-    src = df.select(F.col(id_col).alias("shard_id"))
+    def build(k: int) -> bytes:
+        n = _npz_rows(k)
+        ids = np.array([k * 100 + j for j in range(n)], dtype=np.int64)
+        vecs = np.array(
+            [[_npz_val(k, j, c) for c in range(NPY_COLS)] for j in range(n)],
+            dtype=np.float32,
+        )
+        buf = io.BytesIO()
+        np.savez(buf, ids=ids, vecs=vecs)
+        return buf.getvalue()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for sid in pdf["shard_id"]:
-                k = int(sid)
-                n = _npz_rows(k)
-                ids = np.array([k * 100 + j for j in range(n)], dtype=np.int64)
-                vecs = np.array(
-                    [[_npz_val(k, j, c) for c in range(NPY_COLS)] for j in range(n)],
-                    dtype=np.float32,
-                )
-                buf = io.BytesIO()
-                np.savez(buf, ids=ids, vecs=vecs)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"shard_id": pdf["shard_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="shard_id long, data binary")
+    return _synth(df, id_col, build, key="shard_id")
 
 
 NPZ_DECODED_DDL = "shard_id long, vec_id long, value_sum long, weighted_sum long"

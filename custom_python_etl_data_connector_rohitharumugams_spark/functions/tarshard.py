@@ -24,10 +24,9 @@ materializes more than one archive per loop step).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .multimodal import _synth, map_rows
 
 #: Ceiling on a single tar member's DECLARED size, checked against
 #: ``TarInfo.size`` before any read — a hostile header advertising a
@@ -69,41 +68,25 @@ def synth_tar_shards(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     import json
     import tarfile
 
-    import pandas as pd
+    def build(k: int) -> bytes:
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w") as tf:
+            for j in range(_tar_samples(k)):
+                key = f"{k * 100 + j:08d}"
+                members = {
+                    f"{key}.txt": b"t" * _tar_text_chars(k, j),
+                    f"{key}.json": json.dumps({"label": _tar_label(k, j)}).encode("ascii"),
+                    f"{key}.bin": bytes(
+                        _tar_bin_byte(k, j, i) for i in range(_tar_bin_len(j))
+                    ),
+                }
+                for name, body in members.items():
+                    ti = tarfile.TarInfo(name=name)
+                    ti.size = len(body)
+                    tf.addfile(ti, io.BytesIO(body))
+        return buf.getvalue()
 
-    src = df.select(F.col(id_col).alias("shard_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for sid in pdf["shard_id"]:
-                k = int(sid)
-                buf = io.BytesIO()
-                with tarfile.open(fileobj=buf, mode="w") as tf:
-                    for j in range(_tar_samples(k)):
-                        key = f"{k * 100 + j:08d}"
-                        members = {
-                            f"{key}.txt": b"t" * _tar_text_chars(k, j),
-                            f"{key}.json": json.dumps(
-                                {"label": _tar_label(k, j)}
-                            ).encode("ascii"),
-                            f"{key}.bin": bytes(
-                                _tar_bin_byte(k, j, i)
-                                for i in range(_tar_bin_len(j))
-                            ),
-                        }
-                        for name, body in members.items():
-                            ti = tarfile.TarInfo(name=name)
-                            ti.size = len(body)
-                            tf.addfile(ti, io.BytesIO(body))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"shard_id": pdf["shard_id"].astype("int64"), "data": payloads}
-            )
-
-    return src.mapInPandas(run, schema="shard_id long, data binary")
+    return _synth(df, id_col, build, key="shard_id")
 
 
 TAR_DECODED_DDL = (
@@ -218,83 +201,49 @@ def decode_tar_shards(df: DataFrame) -> DataFrame:
     import json
     import tarfile
 
-    import pandas as pd
-
-    src = df.select("shard_id", "data")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                c: []
-                for c in (
-                    "shard_id",
-                    "sample_id",
-                    "text_chars",
-                    "label",
-                    "bin_len",
-                    "bin_sum",
-                )
-            }
-            for sid, raw in zip(pdf["shard_id"], pdf["data"]):
-                if pd.isna(sid) or raw is None:
+    def decode(sid: int, raw: bytes):
+        samples: dict[str, dict[str, bytes]] = {}
+        with tarfile.open(fileobj=io.BytesIO(raw), mode="r:") as tf:
+            for ti in tf:
+                if not ti.isfile() or "." not in ti.name:
                     continue
-                samples: dict[str, dict[str, bytes]] = {}
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(raw)), mode="r:"
-                    ) as tf:
-                        for ti in tf:
-                            if not ti.isfile() or "." not in ti.name:
-                                continue
-                            key, ext = ti.name.rsplit(".", 1)
-                            if ext not in _SAMPLE_EXTS:
-                                continue
-                            m = samples.setdefault(key, {})
-                            if m.get(ext, b"") is None:
-                                # poison is STICKY: a later same-name
-                                # member must not resurrect a sample a
-                                # bomb/truncation already condemned
-                                continue
-                            if ti.size > _MAX_TAR_MEMBER_BYTES:
-                                # poison the sample: a bomb-declared
-                                # member must not be read AND must not
-                                # leave a partial-looking sample behind
-                                m[ext] = None
-                                continue
-                            fo = tf.extractfile(ti)
-                            if fo is None:
-                                continue
-                            body = fo.read()
-                            if len(body) != ti.size:  # truncated payload
-                                m[ext] = None
-                                continue
-                            # duplicate healthy names: last wins, the
-                            # same resolution tarfile.extract applies
-                            m[ext] = body
-                except (tarfile.TarError, EOFError, OSError):
+                key, ext = ti.name.rsplit(".", 1)
+                if ext not in _SAMPLE_EXTS:
                     continue
-                for key in sorted(samples):
-                    m = samples[key]
-                    if any(m.get(e) is None for e in _SAMPLE_EXTS):
-                        continue
-                    try:
-                        text = m["txt"].decode("utf-8")
-                        meta = json.loads(m["json"].decode("utf-8"))
-                        label = meta["label"]
-                        if not isinstance(label, int) or isinstance(label, bool):
-                            continue
-                        sample_id = int(key)
-                    except (UnicodeDecodeError, ValueError, KeyError, TypeError):
-                        continue
-                    body = m["bin"]
-                    out["shard_id"].append(int(sid))
-                    out["sample_id"].append(sample_id)
-                    out["text_chars"].append(len(text))
-                    out["label"].append(int(label))
-                    out["bin_len"].append(len(body))
-                    out["bin_sum"].append(int(sum(body)))
-            yield pd.DataFrame(
-                {c: pd.Series(v, dtype="int64") for c, v in out.items()}
-            )
+                m = samples.setdefault(key, {})
+                if m.get(ext, b"") is None:
+                    # poison is STICKY: a later same-name member must not
+                    # resurrect a sample a bomb/truncation already condemned
+                    continue
+                if ti.size > _MAX_TAR_MEMBER_BYTES:
+                    # poison the sample: a bomb-declared member must not be
+                    # read AND must not leave a partial-looking sample behind
+                    m[ext] = None
+                    continue
+                fo = tf.extractfile(ti)
+                if fo is None:
+                    continue
+                body = fo.read()
+                if len(body) != ti.size:  # truncated payload
+                    m[ext] = None
+                    continue
+                # duplicate healthy names: last wins, the same resolution
+                # tarfile.extract applies
+                m[ext] = body
+        for key in sorted(samples):
+            m = samples[key]
+            if any(m.get(e) is None for e in _SAMPLE_EXTS):
+                continue
+            try:
+                text = m["txt"].decode("utf-8")
+                meta = json.loads(m["json"].decode("utf-8"))
+                label = meta["label"]
+                if not isinstance(label, int) or isinstance(label, bool):
+                    continue
+                sample_id = int(key)
+            except (UnicodeDecodeError, ValueError, KeyError, TypeError):
+                continue
+            body = m["bin"]
+            yield sid, sample_id, len(text), int(label), len(body), int(sum(body))
 
-    return src.mapInPandas(run, schema=TAR_DECODED_DDL)
+    return map_rows(df.select("shard_id", "data"), decode, TAR_DECODED_DDL, contain=True)

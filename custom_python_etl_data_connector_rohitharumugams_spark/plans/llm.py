@@ -1265,6 +1265,32 @@ def llm_tombstone_compaction_trigger(spark: SparkSession, sf_dir: str) -> DataFr
     return rep_u.crossJoin(F.broadcast(rep_o))
 
 
+def _compaction_legs(e: DataFrame):
+    """``(corpus, tombstone log, live corpus, pre top-5, post top-5)`` of
+    llm_ann_index_compaction: a quarter of the corpus plus every planted
+    twin is tombstoned (the log repeats the quarter, as retries do), then
+    compacted in reassign mode. The pre leg searches the index as it stood
+    before compaction — every corpus row keeps its cell in a map over the
+    full corpus, and tombstones are masked at search time. The post leg
+    searches the compacted live corpus through its own cell map."""
+    n_lists, centers = _frozen_quantizer(e)
+    q, corpus, twin_log = _planted_twins(e)
+    quarter = e.where(F.col("vec_id") % 4 == 0).select("vec_id")
+    dead_log = twin_log.unionByName(quarter).unionByName(quarter)
+    live, centers2 = S.ivf_compact(corpus, centers, dead_log, retrain=False)
+    pre = S.ivf_search(
+        q,
+        S.mask_tombstones(corpus, dead_log),
+        k=5,
+        nprobe=n_lists,
+        cells=S.assign_to_centers(corpus, centers),
+    )
+    post = S.ivf_search(
+        q, live, k=5, nprobe=n_lists, cells=S.assign_to_centers(live, centers2)
+    )
+    return corpus, dead_log, live, pre, post
+
+
 @query(
     "llm_ann_index_compaction",
     tags=("L3", "J4", "O4"),
@@ -1324,30 +1350,18 @@ def llm_ann_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite — the cost profile a production rebuild wants; the searcher
     never sees a hole (ranks re-closed before compaction by the mask,
     after it by absence)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    n_lists, centers = _frozen_quantizer(e)
-    q, corpus, twin_log = _planted_twins(e)
-    quarter = e.where(F.col("vec_id") % 4 == 0).select("vec_id")
-    dead_log = twin_log.unionByName(quarter).unionByName(
-        quarter
-    )  # retries, again on purpose
+    corpus, dead_log, live, pre_masked, post = _compaction_legs(
+        load_table(spark, sf_dir, "embeddings")
+    )
     rep_pre = S.tombstone_load_report(corpus, dead_log).select(
         F.col("n_total").alias("n_total_pre"),
         F.col("n_deleted").alias("n_dead_pre"),
         F.col("rebuild").alias("pre_rebuild"),
     )
-    live, centers2 = S.ivf_compact(corpus, centers, dead_log, retrain=False)
     rep_post = S.tombstone_load_report(live, dead_log).select(
         F.col("n_total").alias("n_live"),
         F.col("deleted_ppm").alias("post_deleted_ppm"),
         F.col("rebuild").alias("post_rebuild"),
-    )
-    masked = S.mask_tombstones(corpus, dead_log)
-    pre_masked = S.ivf_search(
-        q, masked, k=5, nprobe=n_lists, cells=S.assign_to_centers(masked, centers)
-    )
-    post = S.ivf_search(
-        q, live, k=5, nprobe=n_lists, cells=S.assign_to_centers(live, centers2)
     )
     diff = sym_diff_count(pre_masked, post, "__n_diff")
     chk = post.agg(

@@ -1228,15 +1228,14 @@ def test_session_artifacts_and_conf_scopes_live_only_in_session_module():
     assert offenders == []
 
 
-def _stream_start_sites(root):
-    """``{(file, top-level function, needle)}`` for every line of the
-    package at ``root`` that starts or awaits a streaming query, names its
-    checkpoint or starts an overlap thread outside ``_run_stream``."""
+def _needle_sites(files, allowed):
+    """``{(file, top-level function, needle)}`` for every line of ``files``
+    that holds a needle of ``allowed`` outside the ``(file, function)``
+    owners it maps to."""
     import ast
 
-    needles = ("awaitTermination(", "checkpointLocation", "InheritableThread(")
     sites = set()
-    for p in sorted(root.rglob("*.py")):
+    for p in sorted(files):
         text = p.read_text()
         spans = [
             (n.name, n.lineno, n.end_lineno)
@@ -1245,10 +1244,21 @@ def _stream_start_sites(root):
         ]
         for i, line in enumerate(text.splitlines(), 1):
             owner = next((name for name, a, b in spans if a <= i <= b), "<module>")
-            if owner == "_run_stream" and p.name == "stream_batch.py":
-                continue
-            sites.update((p.name, owner, n) for n in needles if n in line)
+            sites.update(
+                (p.name, owner, n)
+                for n, owners in allowed.items()
+                if n in line and (p.name, owner) not in owners
+            )
     return sites
+
+
+def _stream_start_sites(root):
+    """Every line of the package at ``root`` that starts or awaits a
+    streaming query, names its checkpoint or starts an overlap thread
+    outside ``_run_stream``."""
+    needles = ("awaitTermination(", "checkpointLocation", "InheritableThread(")
+    run_stream = {("stream_batch.py", "_run_stream")}
+    return _needle_sites(root.rglob("*.py"), {n: run_stream for n in needles})
 
 
 def test_streaming_queries_start_only_in_run_stream():
@@ -1261,6 +1271,47 @@ def test_streaming_queries_start_only_in_run_stream():
     import custom_python_etl_data_connector_rohitharumugams_spark as pkg
 
     assert _stream_start_sites(Path(pkg.__file__).parent) == set()
+
+
+def _payload_loop_sites(root):
+    """Every line under ``functions/`` of the package at ``root`` that
+    hand-writes a payload batch loop (a ``mapInPandas`` pass or a NULL
+    check) or a BMP file header outside its one owner."""
+    mm = "multimodal.py"
+    allowed = {
+        "mapInPandas(": {(mm, "map_rows"), (mm, "decode_media"), (mm, "spectral_features")},
+        "pd.isna(": {(mm, "map_rows")},
+        'struct.pack("<2sIHHI"': {(mm, "_bmp_bytes")},
+    }
+    return _needle_sites((root / "functions").rglob("*.py"), allowed)
+
+
+def test_payload_codecs_share_one_map_and_one_bmp_writer():
+    """One payload map: every per-row codec in functions/ runs through
+    ``map_rows`` (NULL skip, materialize-then-contain, dtypes from the
+    schema) and every BMP file comes from ``_bmp_bytes``; only
+    ``decode_media`` and ``spectral_features`` keep a batch loop of their
+    own."""
+    from pathlib import Path
+
+    import custom_python_etl_data_connector_rohitharumugams_spark as pkg
+
+    assert _payload_loop_sites(Path(pkg.__file__).parent) == set()
+
+
+def test_compaction_proof_searches_two_different_indexes(spark):
+    """llm_ann_index_compaction's top-5 equality proves something only if
+    its legs are two plans: the pre-compaction index (a cell map over the
+    full corpus, tombstones masked at search time) and the compacted live
+    corpus through its own map. They must still agree row for row."""
+    from custom_python_etl_data_connector_rohitharumugams_spark.catalog import load_table
+    from custom_python_etl_data_connector_rohitharumugams_spark.plans.llm import (
+        _compaction_legs,
+    )
+
+    _, _, _, pre, post = _compaction_legs(load_table(spark, SF, "embeddings"))
+    assert not pre.sameSemantics(post)
+    assert sorted(pre.collect()) == sorted(post.collect())
 
 
 def test_configure_ships_the_package_once_per_context(spark, monkeypatch):

@@ -1,8 +1,8 @@
-"""Dump `.explain("formatted")` for named queries to plans/<tag>/<name>_<suffix>.txt.
+"""Dump `.explain("formatted")` for named queries to .plans/<suffix>/<name>.txt.
 
 Usage: python tools/dump_plans.py <suffix> <name1> [name2 ...]
-Writes plans/$SPARK_GRAFT_PLANDIR/<name>_<suffix>.txt (default r14 —
-the optimization-round deliverable).
+Writes .plans/<suffix>/<name>.txt at the repository root (gitignored), so a
+plan diff is two dumps under different suffixes, one per checkout.
 Query builders run under the engine session at $SPARK_GRAFT_SF_DIR (default
 sf0.1) — streaming queries execute their replay loop at build time, so this
 costs roughly one bench pass over the listed queries.
@@ -18,8 +18,6 @@ REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-OUT = REPO / "plans" / os.environ.get("SPARK_GRAFT_PLANDIR", "r14")
-
 
 def main() -> None:
     suffix = sys.argv[1]
@@ -31,15 +29,16 @@ def main() -> None:
 
     spark = get_spark("plan-dump", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
-    OUT.mkdir(parents=True, exist_ok=True)
+    out = REPO / ".plans" / suffix
+    out.mkdir(parents=True, exist_ok=True)
     qdefs = plans.all_queries()
     for name in names:
         df = qdefs[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        (OUT / f"{name}_{suffix}.txt").write_text(plan)
-        print(f"wrote {name}_{suffix}.txt ({len(plan)} bytes)")
+        (out / f"{name}.txt").write_text(plan)
+        print(f"wrote .plans/{suffix}/{name}.txt ({len(plan)} bytes)")
     spark.stop()
 
 
